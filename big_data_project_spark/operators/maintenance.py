@@ -8,8 +8,11 @@ shuffle-free repeat joins, partition-pruned scans."""
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -29,9 +32,14 @@ def write_bucketed(
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     """MERGE INTO emulation (no Delta in this environment): rows from
     `updates` win on key collision, unmatched target rows survive.
-    Plan shape: one broadcast/shuffle anti-join + union — linear, no
+    Plan shape: one broadcast/shuffle anti-join against the raw update
+    keys (no aggregate or Exchange of their own) + union — linear, no
     driver-side state."""
-    kept = target.join(updates.select(key).distinct(), key, "left_anti")
+    # The right side is the raw update key column, not its distinct():
+    # duplicate keys on the right of a left_anti join cannot change its
+    # result (and null keys still never match), so a distinct would only
+    # add an aggregate, an Exchange and, under AQE, a job of its own.
+    kept = target.join(updates.select(key), key, "left_anti")
     return kept.unionByName(updates)
 
 
@@ -684,7 +692,19 @@ def snapshot_versions(spark: SparkSession, path: str) -> list[int]:
     return sorted(out)
 
 
-def write_snapshot(df: DataFrame, path: str) -> int:
+#: name prefix of a version's commit-tag marker file. The leading ``_``
+#: hides it from Spark's and pyarrow's parquet readers; the name must not
+#: contain ``=``, or Spark would take it for a partition directory.
+SNAPSHOT_TAG_PREFIX = "_commit_tag."
+
+
+def write_snapshot(
+    df: DataFrame,
+    path: str,
+    *,
+    tag: str | None = None,
+    commit_if: Callable[[], bool] | None = None,
+) -> int | None:
     """Append-only versioned store: each call commits the DataFrame as the
     next ``path/v=N`` snapshot and returns N. Old versions are immutable —
     readers pin a version (time travel) or take the latest; no reader is
@@ -704,8 +724,49 @@ def write_snapshot(df: DataFrame, path: str) -> int:
     raw local fs — where rename NESTS instead of failing — versions are
     arbitrated by an O_CREAT|O_EXCL claim marker first
     (``_claim_version``), so concurrent writers are safe there too
-    (chaos-tested with racing OS processes)."""
-    return _commit_snapshot(df, path, max_retries=5)
+    (chaos-tested with racing OS processes).
+
+    Keywords, for streaming sinks:
+
+    - ``tag``: an opaque string committed WITH the version, as an empty
+      marker file inside the stage dir (so it lands in the same rename);
+      :func:`snapshot_tag` reads it back. Streaming sinks tag a version
+      with the epoch that produced it.
+    - ``commit_if``: evaluated after the stage write. False deletes the
+      stage, commits nothing and returns None — e.g. an ``Observation``
+      row count that rode the write job says the input was empty."""
+    import uuid as _uuid
+
+    max_retries = 5
+
+    spark = df.sparkSession
+    fs, hpath, jvm = _fs(spark, path)
+    mk = jvm.org.apache.hadoop.fs.Path
+    # WRITER-UNIQUE stage dir: concurrent writers must never stage onto
+    # the same path (a shared __stage_v{n} would let one writer delete or
+    # interleave with another's in-flight data before the version race is
+    # even reached)
+    stage = mk(f"{path}/__stage_{_uuid.uuid4().hex}")
+    df.write.mode("overwrite").parquet(str(stage.toString()))
+    if commit_if is not None and not commit_if():
+        fs.delete(stage, True)
+        return None
+    if tag is not None:
+        fs.createNewFile(mk(stage, SNAPSHOT_TAG_PREFIX + tag))
+    n = (snapshot_versions(spark, path) or [0])[-1] + 1
+    for _ in range(max_retries + 1):
+        final = mk(f"{path}/v={n}")
+        if (
+            not fs.exists(final)
+            and _claim_version(fs, jvm, path, n)
+            and fs.rename(stage, final)
+        ):
+            return n
+        n += 1  # a concurrent writer claimed/committed this version
+    fs.delete(stage, True)
+    raise IOError(
+        f"snapshot commit lost {max_retries + 1} version races at {path}"
+    )
 
 
 def _claim_version(fs, jvm, path: str, n: int) -> bool:
@@ -731,34 +792,6 @@ def _claim_version(fs, jvm, path: str, n: int) -> bool:
     marker = jvm.java.io.File(f"{local}/__claim_{n}")
     marker.getParentFile().mkdirs()
     return bool(marker.createNewFile())
-
-
-def _commit_snapshot(df: DataFrame, path: str, max_retries: int) -> int:
-    import uuid as _uuid
-
-    spark = df.sparkSession
-    fs, hpath, jvm = _fs(spark, path)
-    mk = jvm.org.apache.hadoop.fs.Path
-    # WRITER-UNIQUE stage dir: concurrent writers must never stage onto
-    # the same path (a shared __stage_v{n} would let one writer delete or
-    # interleave with another's in-flight data before the version race is
-    # even reached)
-    stage = mk(f"{path}/__stage_{_uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(str(stage.toString()))
-    n = (snapshot_versions(spark, path) or [0])[-1] + 1
-    for _ in range(max_retries + 1):
-        final = mk(f"{path}/v={n}")
-        if (
-            not fs.exists(final)
-            and _claim_version(fs, jvm, path, n)
-            and fs.rename(stage, final)
-        ):
-            return n
-        n += 1  # a concurrent writer claimed/committed this version
-    fs.delete(stage, True)
-    raise IOError(
-        f"snapshot commit lost {max_retries + 1} version races at {path}"
-    )
 
 
 def vacuum_snapshots(
@@ -813,17 +846,37 @@ def vacuum_snapshots(
     return dropped
 
 
-def read_snapshot(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
+def snapshot_tag(spark: SparkSession, path: str, version: int) -> str | None:
+    """The tag committed with ``path/v=<version>`` by
+    ``write_snapshot(tag=...)``, or None for an untagged version."""
+    for name in list_dir(spark, f"{path}/v={version}"):
+        if name.startswith(SNAPSHOT_TAG_PREFIX):
+            return name[len(SNAPSHOT_TAG_PREFIX):]
+    return None
+
+
+def read_snapshot(
+    spark: SparkSession,
+    path: str,
+    version: int | None = None,
+    *,
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Read one committed snapshot (default: latest). Version pinning is
     the time-travel read: concurrent new snapshots never change what a
-    pinned reader sees."""
+    pinned reader sees.
+
+    ``schema`` passes the version's known schema: without it the parquet
+    reader infers the schema with a distributed job of its own, so pass
+    it only with a pinned ``version`` the caller wrote itself."""
     versions = snapshot_versions(spark, path)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {path}")
     v = versions[-1] if version is None else version
     if v not in versions:
         raise FileNotFoundError(f"snapshot v={v} not found at {path} (have {versions})")
-    return spark.read.parquet(f"{path}/v={v}")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{path}/v={v}")
 
 
 # ---------------------------------------------------------------------------

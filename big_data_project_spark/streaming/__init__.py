@@ -40,6 +40,7 @@ from big_data_project_spark.streaming.ops import (
     scd2_sink,
     scd2_sink_incremental,
     upsert_sink,
+    VersionedUpsertCommit,
     versioned_upsert_sink,
     user_totals_batch,
     write_stream_parquet,
@@ -66,6 +67,8 @@ __all__ = [
     "scd2_history",
     "compact_scd2_closed",
     "upsert_sink",
+    "versioned_upsert_sink",
+    "VersionedUpsertCommit",
     "user_totals_batch",
     "near_dedup_stream",
     "semantic_dedup_stream",

@@ -990,6 +990,80 @@ def enrich_stream_fresh(
     )
 
 
+class VersionedUpsertCommit:
+    """The foreachBatch body of :func:`versioned_upsert_sink`, as an object
+    so tests can drive one trigger directly (:meth:`commit`).
+
+    One trigger of a sink whose target already exists runs TWO Spark jobs:
+    the broadcast of the batch's keys for the merge's anti-join, and the
+    write of the merged table. Everything else runs without a job:
+
+    - The empty-batch check is an ``Observation`` row count on the batch
+      that rides the write job. An empty batch's stage dir is deleted
+      instead of committed, so no-data triggers add no churn versions.
+    - When the latest version is the one this instance committed, it is
+      read with that version's known schema. After a restart, or when
+      another writer committed since, the schema is inferred (one job),
+      so a table of another shape still fails the merge loudly instead
+      of losing columns silently.
+    - Each version is tagged ``<query id>.<epoch>``. The query id is the
+      stream's persistent id (the ``sql.streaming.queryId`` local
+      property), which survives restarts from the same checkpoint. An
+      epoch whose tag is already on the latest version is a replay and
+      commits nothing. A fresh checkpoint renumbers epochs from 0 under
+      a new query id, so its epoch 0 still commits."""
+
+    def __init__(self, target_path: str, key: str):
+        self.target_path = target_path
+        self.key = key
+        #: (version, schema, tag) of the last version this instance committed
+        self._own: tuple[int, T.StructType, str | None] | None = None
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        self.commit(batch_df, epoch_id, query_id)
+
+    def commit(
+        self, batch_df: DataFrame, epoch_id: int, query_id: str | None
+    ) -> int | None:
+        """Merge one batch into the latest version and commit the result
+        as the next one. Returns the new version, or None when the batch
+        was empty or its epoch is already committed."""
+        from pyspark.sql import Observation
+
+        # module attributes, looked up per call, so wrappers installed on
+        # maintenance's functions after import still see every call
+        from big_data_project_spark.operators import maintenance as mt
+
+        spark = batch_df.sparkSession
+        path = self.target_path
+        tag = None if query_id is None else f"{query_id}.{int(epoch_id)}"
+        versions = mt.snapshot_versions(spark, path)
+        latest = versions[-1] if versions else 0
+        if self._own is not None and self._own[0] == latest:
+            _, schema, latest_tag = self._own
+        else:
+            schema = None
+            latest_tag = mt.snapshot_tag(spark, path, latest) if latest else None
+        if tag is not None and tag == latest_tag:
+            return None
+        obs = Observation()
+        batch = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
+        if latest:
+            prev = mt.read_snapshot(spark, path, latest, schema=schema)
+            merged = mt.merge_upsert(prev, batch, self.key)
+        else:
+            merged = batch
+        version = mt.write_snapshot(
+            merged, path, tag=tag, commit_if=lambda: obs.get["n"] > 0
+        )
+        if version is not None:
+            self._own = (version, merged.schema, tag)
+        return version
+
+
 def versioned_upsert_sink(df: DataFrame, target_path: str, checkpoint: str, key: str):
     """T7c: upsert sink with TIME TRAVEL — each micro-batch merges into the
     latest snapshot by key and commits the result as a NEW immutable
@@ -998,32 +1072,17 @@ def versioned_upsert_sink(df: DataFrame, target_path: str, checkpoint: str, key:
     (training-data reproducibility: the dataloader pins v=N, the feed
     rolls on). Each commit rewrites the merged table — right for dim-to-
     medium tables; for append-heavy facts use the plain parquet sink and
-    partition pruning instead. Replay safety: a retried batch re-merges
-    the same keys and commits an extra version with identical content —
-    duplicate VERSIONS, never duplicate or lost ROWS."""
-    from big_data_project_spark.operators.maintenance import (
-        merge_upsert,
-        read_snapshot,
-        snapshot_versions,
-        write_snapshot,
-    )
-
-    def do_commit(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            # no-data triggers (timing-dependent) must not commit churn
-            # versions: a version history of [data, empty, data] would make
-            # "pin version N" mean different tables run-to-run.
-            return
-        if snapshot_versions(spark, target_path):
-            merged = merge_upsert(read_snapshot(spark, target_path), batch_df, key)
-        else:
-            merged = batch_df
-        write_snapshot(merged, target_path)
-
+    partition pruning instead. Exactly one version per epoch: an empty
+    batch commits nothing, and a replayed epoch finds its own tag on the
+    latest version and skips, so a retry adds neither rows nor versions
+    (see :class:`VersionedUpsertCommit`). Not yet covered: an epoch is
+    what one listing of the source directory found, so a multi-file
+    append that a trigger lists half-way through (a multi-partition
+    ``write.parquet`` renames its part files one by one) is split across
+    two epochs and commits two versions."""
     return (
         df.writeStream.outputMode("update")
-        .foreachBatch(do_commit)
+        .foreachBatch(VersionedUpsertCommit(target_path, key))
         .option("checkpointLocation", checkpoint)
         .start()
     )

@@ -55,6 +55,24 @@ def test_merge_upsert(spark):
     assert out == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
 
 
+def test_merge_upsert_duplicate_and_null_update_keys(spark):
+    """The anti-join takes the update keys without a distinct: a key that
+    repeats in the batch still removes its target row exactly once (every
+    update row survives, as before), and a null update key matches
+    nothing, so a null-keyed target row survives."""
+    target = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (None, "n")], "id long, name string"
+    )
+    updates = spark.createDataFrame(
+        [(2, "b2"), (2, "b3"), (None, "n2")], "id long, name string"
+    )
+    out = sorted(
+        (r.id if r.id is not None else -1, r.name)
+        for r in mt.merge_upsert(target, updates, "id").collect()
+    )
+    assert out == [(-1, "n"), (-1, "n2"), (1, "a"), (2, "b2"), (2, "b3")]
+
+
 def test_scd2_history(spark):
     cur = spark.createDataFrame(
         [(1, "gold", "2024-01-01", None), (2, "silver", "2024-01-01", None)],
@@ -523,6 +541,29 @@ def test_read_snapshot_missing_version_raises(spark, tmp_path):
     mt.write_snapshot(spark.createDataFrame([(1,)], "k long"), path)
     with _pytest.raises(FileNotFoundError):
         mt.read_snapshot(spark, path, version=9)
+
+
+def test_write_snapshot_tag_and_commit_if(spark, tmp_path):
+    """``tag`` commits a marker with the version (hidden from parquet
+    readers), ``commit_if`` False drops the stage without a version, and
+    ``read_snapshot(schema=)`` skips the schema inference without
+    changing what is read."""
+    import os
+
+    from big_data_project_spark.operators import maintenance as mt
+
+    path = str(tmp_path / "snaps")
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    assert mt.write_snapshot(df, path, tag="q.0") == 1
+    assert mt.snapshot_tag(spark, path, 1) == "q.0"
+    assert mt.write_snapshot(df, path, commit_if=lambda: False) is None
+    assert mt.snapshot_versions(spark, path) == [1]
+    assert not [n for n in os.listdir(path) if n.startswith("__stage_")]
+    assert mt.write_snapshot(df, path) == 2
+    assert mt.snapshot_tag(spark, path, 2) is None
+    got = mt.read_snapshot(spark, path, 2, schema=df.schema)
+    assert [(r.k, r.v) for r in got.collect()] == [(1, "a")]
+    assert got.columns == ["k", "v"]
 
 
 # ---------------------------------------------------------------------------

@@ -4,6 +4,7 @@ Structured Streaming test pattern (memory sink + processAllAvailable)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -1443,6 +1444,116 @@ def test_versioned_upsert_sink_time_travel(spark, tmp_path):
               for r in mt.read_snapshot(spark, target).collect()}
     assert v1 == {1: 1.0, 2: 2.0}, v1
     assert latest == {1: 9.0, 2: 2.0, 3: 3.0}, latest
+
+
+def _event_batch(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "event_id long, ts string, user_id long, event_type string, value double, props string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def _drop_file(df, src_dir, name):
+    """Land ``df`` in a watched directory as ONE file that appears
+    atomically, so a trigger can never list the drop half-way through
+    (a multi-partition ``write.parquet`` renames its part files one at a
+    time) and the tests below do not depend on trigger timing."""
+    stage = f"{src_dir}.stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    os.makedirs(src_dir, exist_ok=True)
+    os.rename(os.path.join(stage, part), os.path.join(src_dir, name))
+
+
+def test_versioned_upsert_commit_skips_replayed_epoch(spark, tmp_path):
+    """Exactly one version per epoch: committing the same (query id, epoch)
+    twice — in the same sink or in a new one, as after a restart from the
+    same checkpoint — leaves history [1]. A fresh checkpoint renumbers
+    epochs from 0 under a new query id, so its epoch 0 commits v=2."""
+    from big_data_project_spark.operators import maintenance as mt
+
+    target = str(tmp_path / "replay_target")
+    b = _event_batch(spark, [(1, "2024-01-01 10:00:00", 1, "click", 1.0, "{}")])
+    sink = st.VersionedUpsertCommit(target, "event_id")
+    assert sink.commit(b, 0, "q-a") == 1
+    assert sink.commit(b, 0, "q-a") is None
+    assert mt.snapshot_versions(spark, target) == [1]
+    restarted = st.VersionedUpsertCommit(target, "event_id")
+    assert restarted.commit(b, 0, "q-a") is None
+    assert mt.snapshot_versions(spark, target) == [1]
+    assert mt.snapshot_tag(spark, target, 1) == "q-a.0"
+
+    b2 = _event_batch(spark, [(1, "2024-01-01 10:05:00", 1, "click", 9.0, "{}")])
+    assert st.VersionedUpsertCommit(target, "event_id").commit(b2, 0, "q-b") == 2
+    assert mt.snapshot_versions(spark, target) == [1, 2]
+    assert [r.value for r in mt.read_snapshot(spark, target).collect()] == [9.0]
+
+
+def test_versioned_upsert_sink_empty_file_commits_no_version(spark, tmp_path):
+    """A 0-row parquet file dropped into the watched directory is a batch
+    of its own; it must not add a version (the empty check rides the
+    merge's write job, whose staged output is then dropped)."""
+    from big_data_project_spark.operators import maintenance as mt
+
+    src_dir = str(tmp_path / "empty_src")
+    target = str(tmp_path / "empty_target")
+    b1 = _event_batch(spark, [(1, "2024-01-01 10:00:00", 1, "click", 1.0, "{}")])
+    _drop_file(b1, src_dir, "b1.parquet")
+    q = st.versioned_upsert_sink(
+        st.read_event_stream(spark, src_dir), target, str(tmp_path / "ckpt"),
+        "event_id",
+    )
+    try:
+        q.processAllAvailable()
+        assert mt.snapshot_versions(spark, target) == [1]
+        _drop_file(b1.limit(0), src_dir, "empty.parquet")
+        q.processAllAvailable()
+        assert q.lastProgress["numInputRows"] == 0
+        assert mt.snapshot_versions(spark, target) == [1]
+        b2 = _event_batch(spark, [(2, "2024-01-01 10:01:00", 2, "click", 2.0, "{}")])
+        _drop_file(b2, src_dir, "b2.parquet")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert mt.snapshot_versions(spark, target) == [1, 2]
+    # the tag comes from the stream's own query id; epoch 1 was the empty one
+    assert mt.snapshot_tag(spark, target, 1) == f"{q.id}.0"
+    assert mt.snapshot_tag(spark, target, 2) == f"{q.id}.2"
+    assert sorted(r.event_id for r in mt.read_snapshot(spark, target).collect()) == [1, 2]
+
+
+def test_versioned_upsert_sink_two_jobs_per_trigger(spark, tmp_path):
+    """With the target present, one trigger runs exactly two Spark jobs:
+    the broadcast of the batch keys for the merge's anti-join and the
+    write of the merged table. A new per-trigger job (an empty check, a
+    schema inference, an aggregate) fails here instead of hiding in
+    benchmark noise."""
+    src_dir = str(tmp_path / "jobs_src")
+    rows = lambda i: [  # noqa: E731
+        (10 * i + j, "2024-01-01 10:00:00", j, "click", float(i), "{}")
+        for j in range(5)
+    ]
+    _drop_file(_event_batch(spark, rows(0)), src_dir, "b0.parquet")
+    q = st.versioned_upsert_sink(
+        st.read_event_stream(spark, src_dir), str(tmp_path / "jobs_target"),
+        str(tmp_path / "ckpt"), "user_id",
+    )
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def query_jobs():
+        bus.waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    try:
+        q.processAllAvailable()  # first trigger: no target yet
+        before = query_jobs()
+        _drop_file(_event_batch(spark, rows(1)), src_dir, "b1.parquet")
+        q.processAllAvailable()
+        after = query_jobs()
+    finally:
+        q.stop()
+    assert after - before == 2, f"{after - before} jobs in one trigger"
 
 
 def test_transform_with_state_equals_applyinpandaswithstate(spark, tmp_path):
