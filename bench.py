@@ -248,9 +248,12 @@ def main() -> None:
         # `python bench.py` default path is untouched, and a subset record
         # carries its own query dict so it can never be confused with a
         # full-sweep total.
-        subset = [a for a in args[1:] if a in REGISTRY]
-        if args[1:] and not subset:
-            sys.exit(f"--isolate names unknown: {args[1:]}")
+        subset = args[1:]
+        unknown = [a for a in subset if a not in REGISTRY]
+        if unknown:
+            # any typo is fatal: dropping it would silently shrink the
+            # comparator set
+            sys.exit(f"--isolate names unknown: {unknown}")
         cpu_start = _cpu_jiffies()
         cached_start = _cached_gb()
         load_start = _loadavg()

@@ -53,9 +53,16 @@ def assemble_doc_text(
 
 def q_ident(name: str) -> str:
     """Backtick-quote a column reference with F.col semantics for SQL-text
-    interpolation (ADVICE r11, text.py twin of vector._q_ident): dots are
-    qualifier separators, embedded backticks are doubled so a hostile
-    name cannot break out of the quoting into the expression text."""
+    interpolation — the package's one quoting helper (ADVICE r11): dots
+    are qualifier separators (``a.embedding`` → `a`.`embedding`), embedded
+    backticks are doubled so a hostile name cannot break out of the
+    quoting into the expression text.
+
+    So a column whose name literally contains a dot parses as a qualified
+    reference, not as one column. :func:`train_hashed_classifier` and
+    :func:`classify_hashed` used to backtick the whole name and now
+    resolve such names this way too: pre-alias a literally-dotted column
+    to a dot-free name before passing it."""
     return ".".join(f"`{p.replace('`', '``')}`" for p in name.split("."))
 
 

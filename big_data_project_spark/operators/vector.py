@@ -27,23 +27,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from big_data_project_spark.operators.text import q_ident
 from big_data_project_spark.plans.lineage import lineage_cut
 
 # ---------------------------------------------------------------------------
 # score expressions (JVM-side, codegen'd)
 # ---------------------------------------------------------------------------
 
-def _q_ident(name: str) -> str:
-    """Backtick-quote a column reference with F.col semantics: dots are
-    qualifier separators (``a.embedding`` → `a`.`embedding`); embedded
-    backticks are doubled (SQL escape) so a hostile name cannot break out
-    of the quoting into the expression text (ADVICE r11)."""
-    return ".".join(f"`{p.replace('`', '``')}`" for p in name.split("."))
-
-
 def _d_sql(name: str) -> str:
     """SQL text of :func:`_d` for a plain column name."""
-    return f"transform({_q_ident(name)}, x -> CAST(x AS DOUBLE))"
+    return f"transform({q_ident(name)}, x -> CAST(x AS DOUBLE))"
 
 
 def _d(col: Column | str) -> Column:
@@ -1301,10 +1294,10 @@ def sq8_encode(
     itself is value-hashable (e11_sq8_encode). Output
     ``(id, *keep, sq_scale, codes array<int>)`` — a production sink packs
     codes into a binary column; the array keeps them oracle-visible."""
-    # _q_ident, not a whole-name backtick (ADVICE r11): a dotted qualified
+    # q_ident, not a whole-name backtick (ADVICE r11): a dotted qualified
     # name that resolved via F.col keeps resolving on the string fast path
     absmax = (
-        f"array_max(transform({_q_ident(emb_col)}, "
+        f"array_max(transform({q_ident(emb_col)}, "
         "x -> abs(CAST(x AS DOUBLE))))"
     )
     scale = F.expr(
@@ -1312,7 +1305,7 @@ def sq8_encode(
     )
     enc = embeddings.withColumn("sq_scale", scale)
     codes = F.expr(
-        f"transform({_q_ident(emb_col)}, "
+        f"transform({q_ident(emb_col)}, "
         "x -> CAST(round(CAST(x AS DOUBLE) / sq_scale) AS INT))"
     )
     return enc.select(id_col, *keep, "sq_scale", codes.alias("codes"))

@@ -49,7 +49,15 @@ _MODES = ("local", "reliable", "persist")
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """Cut ``df``'s lineage per the session's ``spark.bdps.lineageCut``
     strategy (see module docstring). ``eager`` materializes now instead
-    of at the first downstream action."""
+    of at the first downstream action.
+
+    Contract for every mode: ``eager=True`` must execute a Dataset
+    action over ``df``'s own plan before returning. ``Observation``
+    callers depend on it — connected components' convergence loop
+    (operators/dedup.py) reads ``obs.get`` right after an eager cut, and
+    ``obs.get`` blocks until an action over the observed plan fires its
+    metrics. A mode that materialized some other way (an RDD-level
+    action, or no action at all) would hang that loop, not fail it."""
     spark = df.sparkSession
     mode = spark.conf.get(CONF_KEY, "local")
     if mode == "local":

@@ -489,6 +489,8 @@ class PerceptualDecoder:
     def transform(
         self, df: DataFrame, payload: str = "payload", id_col: str = "doc_id"
     ) -> DataFrame:
+        from big_data_project_spark.operators.multimodal import _segment_means
+
         if not self.available():
             raise NotImplementedError(
                 f"no perceptual decoder: '{self.binary}' not on PATH and no "
@@ -503,20 +505,12 @@ class PerceptualDecoder:
             F.col(id_col).cast("long").alias("doc_id"), F.col(payload)
         )
         out_columns = [f.name for f in PCM_FEATURE_SCHEMA.fields]
+        segment_means = _segment_means()  # factory-local => pickled by value
 
         # self-contained worker closure (cloudpickle by value) — the same
         # hostile-cwd discipline as decode_features/Embedder
         def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             handle = _cached_handle(("pcm", loader_key), loader)
-
-            def segment_means(vals, d):
-                n = len(vals)
-                out = []
-                for i in range(d):
-                    lo, hi = (i * n) // d, ((i + 1) * n) // d
-                    seg = vals[lo:hi]
-                    out.append(sum(seg) / len(seg) if seg else 0.0)
-                return out
 
             for pdf in it:
                 rows = []

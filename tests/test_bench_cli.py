@@ -86,3 +86,32 @@ def test_bench_default_json_contract():
     assert full["value"] == rec["value"]
     with open(hist, "w") as fh:
         fh.writelines(lines[:-1])
+
+
+def test_bench_isolate_rejects_any_unknown_name(monkeypatch):
+    """A typo next to a valid name must fail the whole --isolate run,
+    naming the typo, before any child JVM starts — not silently shrink
+    the comparator set."""
+    import importlib.util
+
+    import pytest
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_cli_under_test", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    spawned = []
+    monkeypatch.setattr(
+        bench.subprocess, "run", lambda *a, **k: spawned.append(a)
+    )
+    monkeypatch.setattr(
+        sys, "argv",
+        ["bench.py", "--isolate", "mm_strict_decode", "no_such_query"],
+    )
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code not in (0, None)
+    assert "no_such_query" in str(exc.value.code)
+    assert "mm_strict_decode" not in str(exc.value.code)
+    assert spawned == []

@@ -453,6 +453,99 @@ def test_strict_decode_png_rejects_corruption_and_interlace(spark):
         multimodal.decode_features(dfi, decode="strict").collect()
 
 
+def _png_from_scan(width: int, height: int, ctype: int, scan: bytes) -> bytes:
+    """Pack already-filtered scanlines into a CRC-valid 8-bit PNG."""
+    import struct
+    import zlib
+
+    def chunk(typ, body):
+        return (struct.pack(">I", len(body)) + typ + body
+                + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF))
+
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, ctype, 0, 0, 0)
+    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b""))
+
+
+def _filter_scanlines(lines: list, filters: list, bpp: int) -> bytes:
+    """Spec-side PNG filtering of raw scanlines (bpp = bytes per pixel),
+    written independently of the package's encoder."""
+    scan, prev = bytearray(), bytes(len(lines[0]))
+    for cur, f in zip(lines, filters):
+        scan.append(f)
+        for x, v in enumerate(cur):
+            a = cur[x - bpp] if x >= bpp else 0
+            b = prev[x]
+            c = prev[x - bpp] if x >= bpp else 0
+            p = a + b - c
+            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+            pae = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+            scan.append((v - (0, a, b, (a + b) // 2, pae)[f]) & 0xFF)
+        prev = cur
+    return bytes(scan)
+
+
+@pytest.mark.parametrize("ctype", [4, 6])
+def test_png_alpha_color_types_decode_but_never_transcode(spark, ctype):
+    """Gray+alpha (4) and RGBA (6) PNGs: strict decode_features ignores
+    alpha and matches an in-test segment-means model through every
+    filter; transcode_images and resize_images refuse them, because an
+    RGB re-encode would silently drop the alpha channel."""
+    import random
+
+    rng = random.Random(40 + ctype)
+    ch = {4: 2, 6: 4}[ctype]
+    rows, want = [], {}
+    for i in range(8):
+        w, h = rng.randint(1, 7), rng.randint(1, 7)
+        lines = [
+            bytes(rng.randrange(256) for _ in range(w * ch)) for _ in range(h)
+        ]
+        filters = [rng.randint(0, 4) for _ in range(h)]
+        rows.append((i, bytearray(
+            _png_from_scan(w, h, ctype, _filter_scanlines(lines, filters, ch))
+        )))
+        flat = b"".join(lines)
+        pixels = [flat[k : k + ch] for k in range(0, len(flat), ch)]
+        if ctype == 4:
+            gray = [p[0] / 255.0 for p in pixels]
+        else:
+            gray = [(p[0] + p[1] + p[2]) / 3.0 / 255.0 for p in pixels]
+        segs = []
+        for s in range(4):
+            lo, hi = (s * len(gray)) // 4, ((s + 1) * len(gray)) // 4
+            seg = gray[lo:hi]
+            segs.append(sum(seg) / len(seg) if seg else 0.0)
+        want[i] = (h, w, segs)
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    got = multimodal.decode_features(df, dim=4, decode="strict").collect()
+    assert len(got) == len(want)
+    for r in got:
+        h, w, segs = want[r.doc_id]
+        assert (r.media_type, r.height, r.width) == ("image/png", h, w)
+        assert r.features == pytest.approx(segs, abs=1e-6), r.doc_id
+    with pytest.raises(Exception, match="alpha"):
+        multimodal.transcode_images(df).collect()
+    with pytest.raises(Exception, match="alpha"):
+        multimodal.resize_images(df, 2, 2).collect()
+
+
+def test_transcode_rejects_corrupt_png_scanlines(spark):
+    """A CRC-valid PNG whose filter byte is 5 (no such filter) or whose
+    inflated scanlines are one byte short must fail the transcode loudly,
+    never be re-encoded as guessed pixels."""
+    bad_filter = _png_from_scan(2, 1, 2, bytes([5, 1, 2, 3, 4, 5, 6]))
+    df = spark.createDataFrame(
+        [(1, bytearray(bad_filter))], "doc_id long, payload binary"
+    )
+    with pytest.raises(Exception, match="filter"):
+        multimodal.transcode_images(df).collect()
+    short = _png_from_scan(2, 1, 2, bytes([0, 1, 2, 3, 4, 5]))
+    df = spark.createDataFrame([(1, bytearray(short))], "doc_id long, payload binary")
+    with pytest.raises(Exception, match="wrong length"):
+        multimodal.transcode_images(df).collect()
+
+
 # ---------------------------------------------------------------------------
 # STRICT baseline-JPEG codec (round 5: the entropy-codec seam narrows to
 # MP3/progressive). The byte-literal fixture below is assembled from T.81
