@@ -4,7 +4,10 @@ The reference's RAG loop (py:455-484, py:560-577, py:688-707) is driver-side
 LangChain: embed query → FAISS top-k → truncate(1000) → PromptTemplate →
 flan-t5 → heuristic evaluation. Here the deterministic stages are DataFrame
 column functions that run over *batches of queries*, and generation is a
-pluggable interface (plugins.py) excluded from the oracle surface.
+pluggable interface (plugins.py) excluded from the oracle surface. The model
+path (a mapInPandas stage) runs only when a pipeline loader is injected or
+the driver can import transformers; otherwise generation is the extractive
+fallback as a column expression, and a RAG plan runs no Python worker.
 
 Retrieval itself is operators.vector (E2–E6); this module owns prompt
 assembly (R1), the pipeline composition (R3 minus generation), and the
@@ -12,8 +15,10 @@ heuristic evaluator (R4)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from big_data_project_spark.operators.text import q_ident, sql_str
 
 #: the reference's prompt shape (py:462-477): context docs joined by blank
 #: lines, then the question.
@@ -23,24 +28,29 @@ PROMPT_TEMPLATE = (
 )
 
 
-def _context_expr(rank_col: str, text_col: str, descending: bool):
+def _prompt_sql(
+    rank_col: str, text_col: str, descending: bool, question: str
+) -> tuple[str, str]:
     """ONE copy of the context-assembly contract shared by the single and
-    batched prompt builders: snippets ordered by a sortable (rank, text)
-    struct array — deterministic regardless of input order — joined with
-    blank lines, plus the PROMPT_TEMPLATE segments (built from the
-    exported constant so prompt text cannot drift from it). Returns
-    (ctx_aggregate_expr, pre, mid, post)."""
-    rank = F.col(rank_col)
-    sortable = F.struct(
-        (rank * -1 if descending else rank).alias("r"), F.col(text_col).alias("t")
-    )
-    ctx = F.array_join(
-        F.transform(F.array_sort(F.collect_list(sortable)), lambda s: s["t"]),
-        "\n\n",
+    batched prompt builders, as SQL text that each caller's ``selectExpr``
+    or ``agg`` parses once JVM-side (a Column-API lambda chain costs a py4j
+    round trip per call at plan-build time): snippets ordered by a sortable
+    (rank, text) struct array — deterministic regardless of input order —
+    joined with blank lines, then the PROMPT_TEMPLATE segments (built from
+    the exported constant so prompt text cannot drift from it) around the
+    context and the SQL expression ``question``. Returns (context, prompt)."""
+    rank = q_ident(rank_col) + (" * -1" if descending else "")
+    ctx = (
+        f"array_join(transform(array_sort(collect_list(struct({rank} AS r,"
+        f" {q_ident(text_col)} AS t))), s -> s.t), {sql_str(chr(10) * 2)})"
     )
     pre, rest = PROMPT_TEMPLATE.split("{context}")
     mid, post = rest.split("{question}")
-    return ctx, pre, mid, post
+    prompt = (
+        f"concat({sql_str(pre)}, {ctx}, {sql_str(mid)}, {question},"
+        f" {sql_str(post)})"
+    )
+    return ctx, prompt
 
 
 def assemble_prompt(
@@ -51,14 +61,20 @@ def assemble_prompt(
     descending: bool = True,
 ) -> DataFrame:
     """R1 (py:459-477): order the retrieved snippets, join with blank lines,
-    fill the template. Output: single row (question, context, prompt)."""
-    ctx, pre, mid, post = _context_expr(rank_col, text_col, descending)
-    return hits.agg(
-        F.lit(question).alias("question"),
-        ctx.alias("context"),
-        F.concat(
-            F.lit(pre), ctx, F.lit(mid), F.lit(question), F.lit(post)
-        ).alias("prompt"),
+    fill the template. Output: single row (question, context, prompt).
+
+    The question column is an aggregate of the literal, not the literal:
+    a literal would be propagated into every projection above and
+    constant-folded there (evaluate_response's question terms), giving
+    each distinct question its own generated code and so one Janino
+    compile per question. ``coalesce`` keeps the question on the row of
+    an empty ``hits``."""
+    q = sql_str(question)
+    ctx, prompt = _prompt_sql(rank_col, text_col, descending, q)
+    return hits.selectExpr(
+        f"coalesce(any_value({q}), {q}) AS question",
+        f"{ctx} AS context",
+        f"{prompt} AS prompt",
     )
 
 
@@ -71,21 +87,13 @@ def assemble_prompts_batch(
     descending: bool = True,
 ) -> DataFrame:
     """R1, batched: one prompt row per ``key`` — the SAME context-assembly
-    contract as assemble_prompt (shared _context_expr), grouped instead of
+    contract as assemble_prompt (shared _prompt_sql), grouped instead of
     global, so N questions' prompts build in one aggregate over the joined
     hits."""
-    ctx, pre, mid, post = _context_expr(rank_col, text_col, descending)
+    ctx, prompt = _prompt_sql(rank_col, text_col, descending, q_ident(question_col))
     return hits.groupBy(key, question_col).agg(
-        ctx.alias("context"),
-        F.concat(
-            F.lit(pre), ctx, F.lit(mid), F.col(question_col), F.lit(post)
-        ).alias("prompt"),
+        F.expr(f"{ctx} AS context"), F.expr(f"{prompt} AS prompt")
     )
-
-
-def _terms(col: Column) -> Column:
-    """Lowercased whitespace terms of a text column."""
-    return F.split(F.trim(F.lower(col)), "\\s+")
 
 
 def evaluate_response(
@@ -111,8 +119,6 @@ def evaluate_response(
     same split/trim/lower terms, same int/int `/` (double division), `0.5D`
     double literal, 2-arg replace (delete '.') — so values are bit-identical;
     pinned by the r3/r4/r6 oracle hashes and the scoring unit tests."""
-    from big_data_project_spark.operators.text import q_ident
-
     q, a, c = q_ident(question_col), q_ident(answer_col), q_ident(context_col)
 
     def terms(ident: str) -> str:
@@ -163,69 +169,55 @@ def generate_answers(
     out_col: str = "answer",
     pipeline_loader=None,
 ) -> DataFrame:
-    """R2 as a distributed stage: map a batch of prompts to answers via
-    mapInPandas (Arrow-batched — N prompts cost one pass, vs the reference
-    reloading flan-t5 per query, py:479/py:703).
+    """R2 as a distributed stage: append ``out_col``, one answer per prompt.
 
-    ``pipeline_loader`` (zero-arg callable, pickled by value, returning
-    ``fn(prompt) -> [{"generated_text": str}]``) injects the model — the
-    bring-your-own-runtime seam, cached once per worker process via
-    plugins._cached_handle. Without it the closure mirrors
-    plugins.Generator: transformers when importable, else the
-    deterministic extractive fallback (first 30 words of the context
-    section) — so the composition is oracle-checkable in the fallback
-    environment."""
+    Without ``pipeline_loader``, and when the driver cannot import
+    transformers, the answer is the deterministic extractive fallback (first
+    30 words of the context section, plugins.extractive_answer) as ONE SQL
+    column expression: no Python worker, so the composition is
+    oracle-checkable and a RAG plan launches no Python task of its own. A
+    NULL prompt yields a NULL answer on this path.
+
+    Otherwise the MODEL path runs: mapInPandas over Arrow batches (N prompts
+    cost one pass, vs the reference reloading flan-t5 per query,
+    py:479/py:703). ``pipeline_loader`` (zero-arg callable, pickled by
+    value, returning ``fn(prompt) -> [{"generated_text": str}]``) injects
+    the model — the bring-your-own-runtime seam; without it each worker
+    loads flan-t5-base through transformers. Either handle is cached once
+    per worker process (plugins.generation_pipeline); a default model that
+    fails to load is cached as absent, and its prompts get the extractive
+    answer. The worker closure imports this package, which
+    bootstrap.ensure_worker_imports ships to every worker."""
+    import importlib.util
+
+    from big_data_project_spark import plugins
+
+    if pipeline_loader is None and importlib.util.find_spec("transformers") is None:
+        answer = plugins.extractive_answer_sql(q_ident(prompt_col))
+        return prompts.selectExpr("*", f"{answer} AS {q_ident(out_col)}")
+
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
         list(prompts.schema.fields) + [T.StructField(out_col, T.StringType())]
     )
+    # loader identity = cloudpickle content hash, computed driver-side
+    # (qualname would collide for distinct closures from one source line,
+    # silently serving the wrong model from a reused worker)
     loader = pipeline_loader
-    if loader is not None:
-        # loader identity = cloudpickle content hash, computed driver-side
-        # (qualname would collide for distinct closures from one source
-        # line, silently serving the wrong model from a reused worker)
-        from big_data_project_spark.plugins import _loader_token
-
-        loader_key = _loader_token(loader)
+    loader_key = None if loader is None else plugins._loader_token(loader)
 
     def gen_batches(it):
-        model = None
-        if loader is not None:
-            try:
-                from big_data_project_spark import plugins as _plug
+        from big_data_project_spark import plugins as _plug
 
-                model = _plug._cached_handle(("generator", loader_key), loader)
-            except ImportError:
-                model = loader()
-        else:
-            try:  # pragma: no cover - needs torch + weights
-                from transformers import pipeline
-
-                model = pipeline(
-                    "text2text-generation", model="google/flan-t5-base"
-                )
-            except Exception:
-                # broad on purpose: transformers may import fine but fail to
-                # LOAD (no network for weights → OSError, missing torch
-                # backend, incompatible cache). Any model failure must fall
-                # back to the deterministic extractive path, not kill every
-                # task.
-                model = None
+        model = _plug.generation_pipeline(loader, loader_key)
         for pdf in it:
             if model is not None:
                 pdf[out_col] = [
                     model(p)[0]["generated_text"] for p in pdf[prompt_col]
                 ]
             else:
-                pdf[out_col] = [
-                    " ".join(
-                        p.split("Context:\n", 1)[-1]
-                        .split("\n\nQuestion:", 1)[0]
-                        .split()[:30]
-                    )
-                    for p in pdf[prompt_col]
-                ]
+                pdf[out_col] = [_plug.extractive_answer(p) for p in pdf[prompt_col]]
             yield pdf
 
     return prompts.mapInPandas(gen_batches, out_schema)
@@ -242,7 +234,9 @@ def run_rag(
 ) -> DataFrame:
     """R3 full composition (py:688-707): retrieve → prompt → generate →
     evaluate, entirely as DataFrame stages (one row per question here; the
-    same plan serves batches of questions via knn_topk_batch)."""
+    same plan serves batches of questions via knn_topk_batch). Generation is
+    generate_answers' default: the extractive column expression unless the
+    driver can import transformers."""
     prompts = run_retrieval(
         embeddings, documents, query, question, k=k, truncate=truncate, metric=metric
     )
@@ -262,7 +256,7 @@ def run_rag_batch(
     (qid, question, q). Retrieval is knn_topk_batch — the query set is
     broadcast, the embeddings table is scanned ONCE, per-question top-k is
     a window on qid — then prompts assemble in one grouped aggregate and
-    generation maps all prompts in one Arrow-batched pass. N questions
+    generation answers all prompts in one pass (generate_answers). N questions
     cost one table scan + two keyed shuffles, vs the reference running its
     whole FAISS+flan-t5 loop once per question (py:688-707)."""
     from big_data_project_spark.operators import vector

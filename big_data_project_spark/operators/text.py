@@ -66,6 +66,14 @@ def q_ident(name: str) -> str:
     return ".".join(f"`{p.replace('`', '``')}`" for p in name.split("."))
 
 
+def sql_str(value: str) -> str:
+    """``value`` as a SQL string literal for SQL-text interpolation:
+    backslashes and single quotes doubled, which the parser's default
+    escape processing undoes; every other character, newlines included,
+    stays raw."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
 def words_sql(col_name: str) -> str:
     """SQL text of :func:`words_col` for a plain column name (r11, guide
     §1.2 step 2: one parse instead of a ~20 ms py4j lambda-HOF build).
@@ -842,10 +850,6 @@ def bm25_topk(
     terms = sorted({str(t) for t in query_terms})
     tf_cols = [f"_tf{i}" for i in range(len(terms))]
 
-    def _lit(t: str) -> str:
-        # SQL single-quoted literal: double the quotes, double backslashes
-        return "'" + t.replace("\\", "\\\\").replace("'", "''") + "'"
-
     # ONE corpus pass: explode (whole-stage codegen, unlike interpreted
     # array higher-order functions) into a doc-keyed aggregate carrying
     # document length plus one conditional count per query term. The
@@ -863,7 +867,7 @@ def bm25_topk(
         F.expr("CAST(count(*) AS BIGINT) AS dl"),
         *[
             F.expr(
-                f"CAST(count(CASE WHEN term = {_lit(t)} THEN 1 END)"
+                f"CAST(count(CASE WHEN term = {sql_str(t)} THEN 1 END)"
                 f" AS BIGINT) AS {c}"
             )
             for c, t in zip(tf_cols, terms)

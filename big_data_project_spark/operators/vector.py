@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from big_data_project_spark.operators.text import q_ident
 from big_data_project_spark.plans.lineage import lineage_cut
@@ -69,14 +68,18 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def _l2_sq_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({_d_sql(a)}, {_d_sql(b)}, "
+        "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
+    )
+
+
 def l2_sq(a: Column | str, b: Column | str) -> Column:
     """Squared L2 distance Σ (a_i−b_i)². (No sqrt: ordering-equivalent and
     avoids one more rounding step.)"""
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"aggregate(zip_with({_d_sql(a)}, {_d_sql(b)}, "
-            "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
-        )
+        return F.expr(_l2_sq_sql(a, b))
     return F.aggregate(
         F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -90,19 +93,27 @@ def norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def _cosine_sql(a: str, b: str) -> str:
     # try_divide, not `/`: the engine session runs ANSI mode (Spark 4
     # default), where a plain double division by zero THROWS — one
     # zero-norm vector anywhere in a corpus would abort the whole job.
     # try_divide is bit-identical to `/` for every nonzero denominator and
     # yields NULL for zero norms, so a NULL-rejecting threshold filter
     # (`cosine >= t`) simply never matches degenerate vectors.
+    return (
+        f"try_divide({_dot_sql(a, b)}, "
+        f"sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+    )
+
+
+def cosine(a: Column | str, b: Column | str) -> Column:
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"try_divide({_dot_sql(a, b)}, "
-            f"sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
-        )
+        return F.expr(_cosine_sql(a, b))
     return F.try_divide(dot(a, b), norm(a) * norm(b))
+
+
+#: SQL text of each knn metric's score over two plain column names
+_SCORE_SQL = {"ip": _dot_sql, "cosine": _cosine_sql, "l2": _l2_sq_sql}
 
 
 # ---------------------------------------------------------------------------
@@ -133,23 +144,23 @@ def knn_topk(
 ) -> DataFrame:
     """Exact top-k over the embeddings table for a broadcast single-row
     query. metric ∈ {ip, l2, cosine}. Deterministic: ties broken by vec_id.
-    """
-    scored = embeddings.crossJoin(query)
-    if metric == "ip":
-        score = dot("embedding", "q")
-        order = [F.col("score").desc(), F.col("vec_id").asc()]
-    elif metric == "cosine":
-        score = cosine("embedding", "q")
-        order = [F.col("score").desc(), F.col("vec_id").asc()]
-    elif metric == "l2":
-        score = l2_sq("embedding", "q")
-        order = [F.col("score").asc(), F.col("vec_id").asc()]
-    else:
+
+    The query side carries the broadcast hint, as in knn_topk_batch: a
+    query built with createDataFrame has no size statistics, so without
+    it the planner broadcasts the embeddings table instead."""
+    score = _SCORE_SQL.get(metric)
+    if score is None:
         raise ValueError(f"unknown metric {metric!r}")
-    scored = scored.select("vec_id", "label", score.alias("score"))
+    # SQL text and column names, not Column-API calls: each Column method
+    # costs ~10 py4j round trips at plan-build time, paid per query
+    scored = embeddings.crossJoin(F.broadcast(query)).selectExpr(
+        "vec_id", "label", f"{score('embedding', 'q')} AS score"
+    )
     if exclude_vec_id is not None:
-        scored = scored.where(F.col("vec_id") != exclude_vec_id)
-    return scored.orderBy(*order).limit(k)
+        scored = scored.where(f"vec_id != {int(exclude_vec_id)}")
+    # l2 scores are distances (ascending); ties broken by vec_id ascending
+    by_score = F.asc("score") if metric == "l2" else F.desc("score")
+    return scored.orderBy(by_score, F.asc("vec_id")).limit(k)
 
 
 def knn_join_documents(
@@ -162,14 +173,11 @@ def knn_join_documents(
     text to bound downstream prompt size. ``keep_cols`` carries extra hit
     columns through (e.g. the batched serving path's qid) so every caller
     shares ONE copy of the hits→documents join contract."""
-    return (
-        hits.join(documents, hits.vec_id == documents.doc_id)
-        .select(
-            *keep_cols,
-            "vec_id",
-            "score",
-            F.substring("text", 1, truncate).alias("snippet"),
-        )
+    return hits.join(documents, hits["vec_id"] == documents["doc_id"]).selectExpr(
+        *[q_ident(c) for c in keep_cols],
+        "vec_id",
+        "score",
+        f"substring(text, 1, {int(truncate)}) AS snippet",
     )
 
 
@@ -527,21 +535,18 @@ def knn_topk_batch(
     over the table, and per-query top-k is a window (one shuffle on qid,
     each query's heap built in parallel). This is the serving-path shape:
     N queries cost one scan, not N scans."""
-    scored = embeddings.crossJoin(F.broadcast(queries))
-    if metric == "ip":
-        score = dot("embedding", "q")
-        order = [F.col("score").desc(), F.col("vec_id")]
-    elif metric == "cosine":
-        score = cosine("embedding", "q")
-        order = [F.col("score").desc(), F.col("vec_id")]
-    else:
-        score = l2_sq("embedding", "q")
-        order = [F.col("score").asc(), F.col("vec_id")]
-    w = Window.partitionBy("qid").orderBy(*order)
+    # any metric other than ip/cosine scores as l2 (distance, ascending)
+    score = _SCORE_SQL.get(metric, _l2_sq_sql)
+    direction = "ASC" if score is _l2_sq_sql else "DESC"
     return (
-        scored.select("qid", "vec_id", "label", score.alias("score"))
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= k)
+        embeddings.crossJoin(F.broadcast(queries))
+        .selectExpr("qid", "vec_id", "label", f"{score('embedding', 'q')} AS score")
+        .selectExpr(
+            "*",
+            "CAST(row_number() OVER (PARTITION BY qid ORDER BY score"
+            f" {direction}, vec_id) AS BIGINT) AS rn",
+        )
+        .where(f"rn <= {int(k)}")
     )
 
 

@@ -119,12 +119,12 @@ def _cached_handle(key, loader):
     ``loader()`` and cache it. Lives at module level so the cache survives
     across tasks on a reused worker (requires this package importable on
     the worker — true in local mode and in any --py-files/wheel deploy;
-    callers fall back to a fresh load when it is not)."""
-    h = _MODEL_HANDLES.get(key)
-    if h is None:
-        h = loader()
-        _MODEL_HANDLES[key] = h
-    return h
+    callers fall back to a fresh load when it is not). A ``None`` handle
+    (a load that failed and chose a fallback) is cached like any other, so
+    a worker does not retry a failing load in every task."""
+    if key not in _MODEL_HANDLES:
+        _MODEL_HANDLES[key] = loader()
+    return _MODEL_HANDLES[key]
 
 
 class Embedder:
@@ -264,14 +264,80 @@ class Embedder:
         return df.mapInPandas(embed_batches, out_schema)
 
 
+#: The extractive fallback's rule: the first ``_EXTRACT_WORDS`` whitespace
+#: tokens of the prompt's context section, i.e. the text after the first
+#: ``_CONTEXT_OPEN`` (the whole prompt when it is absent) and before the
+#: first ``_CONTEXT_CLOSE`` after it. Both markers come from
+#: rag.PROMPT_TEMPLATE and contain no regex metacharacters.
+_CONTEXT_OPEN = "Context:\n"
+_CONTEXT_CLOSE = "\n\nQuestion:"
+_EXTRACT_WORDS = 30
+
+#: Java-regex class of exactly Python's ``str.isspace`` code points (all 29;
+#: Java's ``\s`` lacks \x1C-\x1F, \x85, \xA0 and the Unicode spaces), so
+#: the SQL rule tokenizes as ``str.split()`` does.
+_ISSPACE_CLASS = (
+    r"[\t\n\x0B\f\r\x1C-\x1F \x85\xA0\u1680\u2000-\u200A\u2028\u2029"
+    r"\u202F\u205F\u3000]"
+)
+
+
+def extractive_answer(prompt: str) -> str:
+    """The deterministic extractive "generator": the first 30 words of the
+    prompt's context section. Python copy of :func:`extractive_answer_sql`."""
+    ctx = prompt.split(_CONTEXT_OPEN, 1)[-1].split(_CONTEXT_CLOSE, 1)[0]
+    return " ".join(ctx.split()[:_EXTRACT_WORDS])
+
+
+def extractive_answer_sql(prompt: str) -> str:
+    """SQL text of :func:`extractive_answer` over the SQL expression
+    ``prompt``, run JVM-side with no Python worker. ``split`` with limit 2
+    cuts at the first marker as ``str.split(sep, 1)`` does, and the empty
+    tokens that leading or trailing whitespace leave are filtered out, as
+    ``str.split()`` drops them. A NULL prompt yields a NULL answer."""
+    from big_data_project_spark.operators.text import sql_str
+
+    ctx = (
+        f"element_at(split(element_at(split({prompt}, {sql_str(_CONTEXT_OPEN)},"
+        f" 2), -1), {sql_str(_CONTEXT_CLOSE)}, 2), 1)"
+    )
+    return (
+        f"array_join(slice(filter(split({ctx}, {sql_str(_ISSPACE_CLASS + '+')},"
+        f" -1), w -> w != ''), 1, {_EXTRACT_WORDS}), ' ')"
+    )
+
+
+def _load_default_generator():
+    """flan-t5-base through transformers, or None when it cannot be loaded.
+    Broad on purpose: transformers may import fine but fail to LOAD (no
+    network for weights → OSError, missing torch backend, incompatible
+    cache); any such failure means the extractive fallback."""
+    try:
+        from transformers import pipeline
+
+        return pipeline("text2text-generation", model="google/flan-t5-base")
+    except Exception:
+        return None
+
+
+def generation_pipeline(loader=None, loader_key: str | None = None):
+    """The per-process text2text handle rag.generate_answers' worker closure
+    uses: ``loader()``'s result cached under its content token, or the
+    default flan-t5-base pipeline cached under a fixed key. None when the
+    default could not load; that outcome is cached too."""
+    if loader is None:
+        return _cached_handle(("generator", "default"), _load_default_generator)
+    return _cached_handle(("generator", loader_key), loader)
+
+
 class Generator:
     """R2: pluggable text generation with a CACHED model handle.
 
     The reference reloads flan-t5-base inside run_rag on every query
     (py:479, py:703) — the dominant latency cost in BASELINE.md. Here the
     pipeline is loaded once per process and reused. Fallback: a deterministic
-    extractive "generator" (first sentence of the context) so RAG plumbing
-    is testable without torch."""
+    extractive "generator" (:func:`extractive_answer`, the first 30 words of
+    the context) so RAG plumbing is testable without torch."""
 
     _cached = None
 
@@ -327,9 +393,7 @@ class Generator:
     def generate(self, prompt: str) -> str:
         if self.available():
             return self._pipeline()(prompt)[0]["generated_text"]
-        # deterministic extractive fallback: first 30 words of the context
-        ctx = prompt.split("Context:\n", 1)[-1].split("\n\nQuestion:", 1)[0]
-        return " ".join(ctx.split()[:30])
+        return extractive_answer(prompt)
 
 
 class SparkNLPNer:

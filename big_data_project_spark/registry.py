@@ -2759,8 +2759,8 @@ def e1_embed_documents(spark, sf_dir):
 )
 def r3_run_rag(spark, sf_dir):
     """R3 (ref py:688-707): the FULL RAG composition — retrieve → prompt →
-    generate (mapInPandas; deterministic extractive fallback = first 30
-    context words, mirroring plugins.Generator) → evaluate. End-to-end
+    generate (deterministic extractive fallback = first 30 context words,
+    plugins.extractive_answer_sql; no Python worker) → evaluate. End-to-end
     hash-checked against the same composition in SQL."""
     emb = _t(spark, sf_dir, "embeddings")
     return rag.run_rag(
@@ -2830,7 +2830,7 @@ def r3_run_rag(spark, sf_dir):
 def r6_rag_batch(spark, sf_dir):
     """R3 in its SERVING shape: three questions through ONE plan —
     broadcast query set, single embeddings scan, per-question top-k
-    window, grouped prompt assembly, one Arrow-batched generate pass —
+    window, grouped prompt assembly, one generate pass —
     vs the reference's per-question FAISS+flan-t5 loop (py:688-707). The
     whole batched composition is value-hashed per question."""
     emb = _t(spark, sf_dir, "embeddings")

@@ -154,6 +154,49 @@ def test_generate_answers_fallback_unchanged(spark):
     assert row.answer == " ".join(f"w{i}" for i in range(30))
 
 
+def test_generate_answers_null_prompt_yields_null_answer(spark):
+    """The extractive column expression maps a NULL prompt to a NULL answer
+    (the Python-worker form of the rule raised on it)."""
+    prompts = spark.createDataFrame([(1, None)], "qid long, prompt string")
+    assert rag.generate_answers(prompts).collect()[0].answer is None
+
+
+def test_default_generation_pipeline_loads_once_per_process(monkeypatch):
+    """The default model branch resolves through plugins._cached_handle
+    under one fixed key: two resolutions make one pipeline() call, and a
+    load that raises is cached as absent (None), not retried per task."""
+    import sys
+    import types
+
+    calls = []
+
+    def fake_transformers(pipeline):
+        mod = types.ModuleType("transformers")
+        mod.pipeline = pipeline
+        monkeypatch.setitem(sys.modules, "transformers", mod)
+        monkeypatch.setattr(plugins, "_MODEL_HANDLES", {})
+        calls.clear()
+
+    def pipeline(task, model):
+        calls.append((task, model))
+        return lambda prompt: [{"generated_text": "model"}]
+
+    fake_transformers(pipeline)
+    first = plugins.generation_pipeline()
+    assert plugins.generation_pipeline() is first
+    assert first("p") == [{"generated_text": "model"}]
+    assert calls == [("text2text-generation", "google/flan-t5-base")]
+
+    def failing(task, model):
+        calls.append((task, model))
+        raise OSError("no weights offline")
+
+    fake_transformers(failing)
+    assert plugins.generation_pipeline() is None
+    assert plugins.generation_pipeline() is None
+    assert len(calls) == 1
+
+
 def test_sparknlp_ner_injected_factory(spark):
     """The N1 model path's transform plumbing: the pipeline receives the
     df with the column RENAMED to `text` (the Spark NLP input contract)

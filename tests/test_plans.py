@@ -544,6 +544,56 @@ def test_rag_batch_broadcasts_queries_single_table_pass(spark, sf_dir):
     assert plans.num_shuffles(df) <= 4, p
 
 
+def _query_vector(spark, sf_dir):
+    from big_data_project_spark import io
+
+    emb = io.load_table(spark, sf_dir, "embeddings")
+    q = emb.select("embedding").limit(1).collect()[0].embedding
+    return emb, spark.createDataFrame([(q,)], "q array<float>")
+
+
+def test_knn_topk_broadcasts_the_query_not_the_table(spark, sf_dir):
+    """A createDataFrame query has no size statistics: knn_topk must still
+    broadcast it (BuildRight) and never put the embeddings scan under a
+    BroadcastExchange."""
+    from big_data_project_spark.operators import vector
+
+    emb, query = _query_vector(spark, sf_dir)
+    lines = plans.physical_plan(vector.knn_topk(emb, query, k=7)).splitlines()
+    assert any(
+        "BroadcastNestedLoopJoin BuildRight" in ln for ln in lines
+    ), "\n".join(lines)
+    for i, ln in enumerate(lines):
+        if "BroadcastExchange" not in ln:
+            continue
+        depth = ln.index("BroadcastExchange")
+        for below in lines[i + 1:]:
+            if len(below) - len(below.lstrip(" :+-")) <= depth:
+                break
+            assert "embeddings" not in below, "\n".join(lines)
+
+
+def test_run_rag_without_model_runs_no_python(spark, sf_dir):
+    """With no pipeline loader (and no transformers on the driver), the
+    single-question RAG plan is JVM-only: the executed plan has no Python
+    node, so a question launches no Python-worker task of its own."""
+    import importlib.util
+
+    import pytest
+
+    from big_data_project_spark import io
+    from big_data_project_spark.operators import rag
+
+    if importlib.util.find_spec("transformers") is not None:
+        pytest.skip("transformers importable: generate_answers takes the model path")
+    emb, query = _query_vector(spark, sf_dir)
+    df = rag.run_rag(emb, io.load_table(spark, sf_dir, "documents"), query, "q", k=7)
+    assert len(df.collect()) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "MapInArrow"):
+        assert node not in plan, plan
+
+
 def test_sq8_topk_never_shuffles_the_codes(spark, sf_dir):
     """SQ8 serving must keep exact-knn's shape: broadcast single-row query
     + in-fold reconstruction + TakeOrdered — zero Exchange on the encoded

@@ -2264,3 +2264,55 @@ def test_audio_fingerprint_scale_invariance_property(spark, energies):
         if energies[j] > energies[j - 1]
     )
     assert out[0][0] == want
+
+
+# ---------------------------------------------------------------------------
+# Extractive generation: the SQL column expression ≡ the Python rule
+# ---------------------------------------------------------------------------
+
+#: every code point Python's str.isspace / str.split() treats as whitespace
+_ISSPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+#: non-whitespace look-alikes (zero-width and format characters) and a few
+#: regex/SQL metacharacters that must stay part of a word
+_WORD_CHARS = list("aZ9.,:?'\\[]+*é漢") + ["\u200b", "\u180e", "\ufeff", "\u2060", "\x00"]
+_GAP = st.text(alphabet=st.sampled_from(_ISSPACE), min_size=1, max_size=3)
+_WORD = st.text(alphabet=st.sampled_from(_WORD_CHARS), min_size=1, max_size=5)
+_SPAN = st.tuples(
+    st.lists(st.tuples(_GAP, _WORD), max_size=45).map(
+        lambda ws: "".join(g + w for g, w in ws)
+    ),
+    st.one_of(st.just(""), _GAP),
+).map("".join)
+#: the two markers, their fragments, repeats, and the empty string
+_MARKER = st.sampled_from(
+    ["Context:\n", "\n\nQuestion:", "Context:", "\nQuestion:", "\n\n",
+     "Context:\nContext:\n", "\n\nQuestion:\n\nQuestion:", ""]
+)
+_PROMPTS = st.lists(
+    st.lists(st.one_of(_SPAN, _MARKER), max_size=6).map("".join),
+    min_size=1,
+    max_size=12,
+)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_PROMPTS)
+def test_extractive_answer_sql_matches_python_rule(spark, prompts):
+    """plugins.extractive_answer_sql, the column expression run_rag uses
+    without a model, answers every prompt exactly as the Python rule the
+    model path falls back to: any of the 29 isspace characters separate
+    words, markers may be missing, repeated or empty, and only the first
+    30 words are kept."""
+    from big_data_project_spark import plugins
+
+    # plus one 40-word context separated by each whitespace character in turn
+    prompts = prompts + [
+        "Context:\n" + "".join(f"w{i}{_ISSPACE[i % len(_ISSPACE)]}" for i in range(40))
+    ]
+    df = spark.createDataFrame(list(enumerate(prompts)), "i long, p string")
+    got = {
+        r.i: r.a
+        for r in df.selectExpr("i", f"{plugins.extractive_answer_sql('p')} AS a").collect()
+    }
+    for i, p in enumerate(prompts):
+        assert got[i] == plugins.extractive_answer(p), repr(p)
