@@ -186,8 +186,9 @@ def generate_answers(
     loads flan-t5-base through transformers. Either handle is cached once
     per worker process (plugins.generation_pipeline); a default model that
     fails to load is cached as absent, and its prompts get the extractive
-    answer. The worker closure imports this package, which
-    bootstrap.ensure_worker_imports ships to every worker."""
+    answer. The worker closure imports this package, so this path ships it
+    to the workers first (bootstrap.ensure_worker_imports, once per
+    context)."""
     import importlib.util
 
     from big_data_project_spark import plugins
@@ -198,6 +199,9 @@ def generate_answers(
 
     from pyspark.sql import types as T
 
+    from big_data_project_spark import bootstrap
+
+    bootstrap.ensure_worker_imports(prompts.sparkSession)
     out_schema = T.StructType(
         list(prompts.schema.fields) + [T.StructField(out_col, T.StringType())]
     )

@@ -68,10 +68,12 @@ def q_ident(name: str) -> str:
 
 def sql_str(value: str) -> str:
     """``value`` as a SQL string literal for SQL-text interpolation:
-    backslashes and single quotes doubled, which the parser's default
-    escape processing undoes; every other character, newlines included,
-    stays raw."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
+    backslashes doubled and single quotes backslash-escaped, which the
+    parser's default escape processing undoes (a doubled quote is not
+    portable: a Spark lexer without the ``''`` escape reads ``'a''b'`` as
+    two adjacent literals, ``ab``); every other character, newlines
+    included, stays raw."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def words_sql(col_name: str) -> str:

@@ -119,7 +119,9 @@ def _cached_handle(key, loader):
     ``loader()`` and cache it. Lives at module level so the cache survives
     across tasks on a reused worker (requires this package importable on
     the worker — true in local mode and in any --py-files/wheel deploy;
-    callers fall back to a fresh load when it is not). A ``None`` handle
+    Embedder falls back to a fresh load when it is not, and
+    rag.generate_answers' model path ships the package first through
+    bootstrap.ensure_worker_imports). A ``None`` handle
     (a load that failed and chose a fallback) is cached like any other, so
     a worker does not retry a failing load in every task."""
     if key not in _MODEL_HANDLES:

@@ -117,9 +117,10 @@ def _run(spark, out_dir: str) -> None:
         print(f"  vec_id={r.vec_id} score={r.score:.4f} {r.snippet[:60]!r}...")
 
     # --- run_rag + evaluate (py:455-628) ---
-    # cache: the RAG DAG spans retrieval + mapInPandas generation — without
+    # cache: the RAG DAG spans retrieval + generation (a column expression,
+    # or a mapInPandas model stage when transformers is present) — without
     # it the write and the collect below would each run the whole pipeline
-    # (and, with transformers present, generate twice)
+    # (and, with a model, generate twice)
     result = rag.run_rag(emb, docs, q, QUESTION, k=7).cache()
     io.write_json(result, f"{out_dir}/llm_evaluation")
     row = result.collect()[0]

@@ -24,6 +24,21 @@ def test_prompt_contains_topk_snippets_in_rank_order(spark, sf_dir):
     assert "what is spark" in row.prompt
 
 
+def test_question_text_survives_sql_quoting(spark, sf_dir):
+    """The question is interpolated into SQL text (text.sql_str): an
+    apostrophe, a backslash and backslash-escape look-alikes must come back
+    exactly, in the question column and inside the prompt."""
+    emb = io.load_table(spark, sf_dir, "embeddings")
+    docs = io.load_table(spark, sf_dir, "documents")
+    q = vector.query_vector_of(emb, 0)
+    question = "Is Amazon's $15B bet a \\ risk? C:\\new\\table 100\\% \\u0041 'x'"
+    hits = vector.knn_join_documents(vector.knn_topk(emb, q, k=3), docs, truncate=50)
+    row = rag.assemble_prompt(hits, question).collect()[0]
+    assert row.question == question
+    assert f"Question: {question}\n" in row.prompt
+    assert rag.run_rag(emb, docs, q, question, k=3).collect()[0].question == question
+
+
 def test_evaluate_response_scores(spark):
     df = spark.createDataFrame(
         [

@@ -24,6 +24,22 @@ def test_bm25_ranks_matching_docs_first(spark):
     assert ids[0] == 2 and ids.index(1) < ids.index(4)
 
 
+def test_sql_str_round_trips_quotes_and_backslashes(spark):
+    values = ["Amazon's", "it''s", "a\\b", "\\'", "100\\%", "\\u0041", "\\n", "l1\nl2\tx", "€ ü"]
+    row = spark.sql(
+        "SELECT " + ", ".join(f"{text.sql_str(v)} AS c{i}" for i, v in enumerate(values))
+    ).collect()[0]
+    assert list(row) == values
+
+
+def test_bm25_term_with_apostrophe(spark):
+    docs = spark.createDataFrame(
+        [(1, "amazon's bet"), (2, "amazons bet")], ["doc_id", "text"]
+    )
+    out = text.bm25_topk(docs, ["amazon's"], k=10).collect()
+    assert [r["doc_id"] for r in out] == [1]
+
+
 def test_rrf_fusion_rewards_presence_in_both_lists(spark):
     a = spark.createDataFrame([(10, 1), (11, 2), (12, 3)], ["doc_id", "rank"])
     b = spark.createDataFrame([(12, 1), (13, 2)], ["doc_id", "rank"])
