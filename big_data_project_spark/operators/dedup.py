@@ -25,11 +25,10 @@ re-executing an expensive subtree referenced by several plan branches,
 or to keep iterative plans from growing without bound. All cut sites
 route through :func:`plans.lineage.lineage_cut`, which honors the
 session conf ``spark.bdps.lineageCut``: ``local`` (default —
-localCheckpoint, the right trade on local[n] where executor == driver),
-``reliable`` (``checkpoint()`` to a durable dir, survives executor loss
-— set this on a real cluster), or ``persist`` (MEMORY_AND_DISK,
-recompute-on-loss). Results are mode-invariant; see the lineage module
-docstring for the full trade table.
+localCheckpoint, the right trade on local[n] where executor == driver)
+or ``reliable`` (``checkpoint()`` to a durable dir, survives executor
+loss — set this on a real cluster). Results are mode-invariant; see the
+lineage module docstring.
 """
 
 from __future__ import annotations
@@ -1893,7 +1892,6 @@ def novelty_report(
 def duplicate_spans(
     docs: DataFrame, n: int = 5, min_count: int = 2,
     text: str = "text", id_col: str = "doc_id",
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Per-document report of duplicated n-gram spans: every maximal token
     range covered by word n-grams that occur >= ``min_count`` times in the
@@ -1907,16 +1905,13 @@ def duplicate_spans(
     1. tokenize, emit (doc, pos, xxhash64(gram)) — narrow map stages; the
        64-bit hash (not the gram text) is what shuffles, so shuffle width
        is constant regardless of n;
-    2. find grams with global count >= min_count. Default (``skew_safe``):
-       groupBy(gh) + equi-join back — the map-side partial aggregate
-       collapses hot grams BEFORE the shuffle, and the join-back is an
-       AQE-skew-splittable SMJ, so a boilerplate gram repeated across
-       millions of documents (exactly what this operator exists to find)
-       cannot concentrate on one task. ``skew_safe=False`` switches to a
-       single count-window over gh — one fewer corpus pass (~40% faster
-       at small scale) but a window partition holds EVERY occurrence of
-       its hottest gram (no partial agg, and AQE skew handling does not
-       apply to window operators): safe only when no gram is hot.
+    2. find grams with global count >= min_count: groupBy(gh) + equi-join
+       back — the map-side partial aggregate collapses hot grams BEFORE
+       the shuffle, and the join-back is an AQE-skew-splittable SMJ, so a
+       boilerplate gram repeated across millions of documents (exactly
+       what this operator exists to find) cannot concentrate on one task.
+       A count-window over gh would save a corpus pass but hold EVERY
+       occurrence of its hottest gram in one window partition.
     3. islands-and-gaps span merge per document: a lag window flags a new
        island whenever the next duplicated position starts more than n
        tokens after the previous (uniform-length intervals make the running
@@ -1924,8 +1919,7 @@ def duplicate_spans(
        groupBy collapses each island to (min_pos, max_pos + n - 1);
     4. per-doc rollup to span count / covered tokens / permille.
 
-    Everything is whole-stage-codegen Catalyst; in the default mode memory
-    per task is bounded by partition size, never by corpus or document
+    Everything is whole-stage-codegen Catalyst; memory per task is bounded by partition size, never by corpus or document
     count. The hash substitutes for gram equality (a 64-bit collision
     would merge two unrelated grams); at the paper's scale that chance is
     ~(grams²)/2⁶⁵ — accepted, as in the MinHash family above."""
@@ -1944,27 +1938,18 @@ def duplicate_spans(
             )
         ).alias("pos", "gram"),
     ).select("doc_id", "total_tokens", "pos", F.xxhash64("gram").alias("gh"))
-    if skew_safe:
-        # the gram stream feeds BOTH the count aggregate and the join-back
-        # side; without a cut the tokenize+explode+hash map pass runs
-        # twice. localCheckpoint materializes it once — the storage cost
-        # is the same order as the shuffle this branch already pays.
-        grams = grams.transform(lineage_cut)
-        dup = (
-            grams.groupBy("gh")
-            .agg(F.count("*").alias("cnt"))
-            .where(F.col("cnt") >= min_count)
-            .select("gh")
-        )
-        occ = grams.join(dup, "gh").select("doc_id", "total_tokens", "pos")
-    else:
-        occ = (
-            grams.withColumn(
-                "cnt", F.count("*").over(Window.partitionBy("gh"))
-            )
-            .where(F.col("cnt") >= min_count)
-            .select("doc_id", "total_tokens", "pos")
-        )
+    # the gram stream feeds BOTH the count aggregate and the join-back
+    # side; without a cut the tokenize+explode+hash map pass runs twice.
+    # localCheckpoint materializes it once — the storage cost is the same
+    # order as the shuffle the join-back already pays.
+    grams = grams.transform(lineage_cut)
+    dup = (
+        grams.groupBy("gh")
+        .agg(F.count("*").alias("cnt"))
+        .where(F.col("cnt") >= min_count)
+        .select("gh")
+    )
+    occ = grams.join(dup, "gh").select("doc_id", "total_tokens", "pos")
     byd = Window.partitionBy("doc_id").orderBy("pos")
     run = byd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # merge overlapping AND adjacent intervals: the previous gram covers

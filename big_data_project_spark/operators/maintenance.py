@@ -49,7 +49,6 @@ def scd2_apply(
     key: str,
     ts_col: str,
     attrs: list[str],
-    broadcast_changed_keys: bool = False,
 ) -> DataFrame:
     """Slowly-changing-dimension type 2: close out current versions that
     changed, append the new versions, keep full history.
@@ -57,11 +56,10 @@ def scd2_apply(
     current schema: key, attrs..., valid_from, valid_to (null = open).
     updates schema: key, attrs..., ts_col.
 
-    ``broadcast_changed_keys`` opts INTO a broadcast of the changed-key set
-    for trickle loads where the caller knows churn is tiny. Default off: a
-    full-churn batch makes changed_keys as large as the dimension itself,
-    and a mandatory broadcast would OOM the executors — the default plain
-    join lets AQE broadcast it only when it measures small.
+    The changed-key join carries no broadcast hint: a full-churn batch
+    makes changed_keys as large as the dimension itself, and a mandatory
+    broadcast would OOM the executors — the plain join lets AQE broadcast
+    it only when it measures small.
 
     CHAINED applies must materialize between rounds (write the history
     out, or ``plans.lineage.lineage_cut`` it): feeding one apply's LAZY
@@ -112,10 +110,9 @@ def scd2_apply(
     changed_keys = classified.where(
         F.col("_has_open").isNotNull() & changed_pred
     ).select(key, F.col(f"u.{ts_col}").alias("_close_ts"))
-    ck = F.broadcast(changed_keys) if broadcast_changed_keys else changed_keys
     closed = (
         current.alias("c")
-        .join(ck.alias("k"), key, "left")
+        .join(changed_keys.alias("k"), key, "left")
         .select(
             "c.*",
             F.when(

@@ -1072,7 +1072,7 @@ def lm_fluency(
     )
 
 
-def hash_bucket(col: Column | str, n_buckets: int) -> Column:
+def feature_bucket(col: Column | str, n_buckets: int) -> Column:
     """md5-derived feature bucket in [0, n_buckets) — the vocabulary-free
     feature hashing trick (fastText/Vowpal): fixed-width feature space, no
     vocab table to build, ship, or grow. md5 (not xxhash64) so the bucket
@@ -1113,7 +1113,7 @@ def train_hashed_classifier(
         f"explode({words_sql(text)}) AS t",
     )
     per_bucket = (
-        toks.groupBy(hash_bucket("t", n_buckets).alias("bucket"))
+        toks.groupBy(feature_bucket("t", n_buckets).alias("bucket"))
         .agg(
             F.expr("CAST(sum(1 - _y) AS BIGINT) AS n0"),
             F.expr("CAST(sum(_y) AS BIGINT) AS n1"),
@@ -1149,7 +1149,7 @@ def classify_hashed(
     groupBy(id): the 100 TB shape of every model-based quality gate."""
     toks = df.selectExpr(
         f"{q_ident(id_col)}", f"explode_outer({words_sql(text)}) AS t"
-    ).withColumn("bucket", hash_bucket("t", n_buckets))
+    ).withColumn("bucket", feature_bucket("t", n_buckets))
     # null token (empty doc) → null bucket → no match; left join keeps the row
     scored = toks.join(
         F.broadcast(weights.select("bucket", "w_milli")), "bucket", "left"

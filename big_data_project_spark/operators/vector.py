@@ -596,8 +596,8 @@ def semantic_dedup(
     collapse_exact: bool = True,
     cluster_cap: int | None = 1024,
     centroids: DataFrame | None = None,
-    recover_bands: int | str = "auto",
-    recover_bits: int | str = "auto",
+    recover_bands: int = 4,
+    recover_bits: int = 8,
     recover_seed: int = 42,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -700,16 +700,12 @@ def semantic_dedup(
     fires (the banding exists only in the fired branch, over hot-cluster
     members only).
 
-    **Default** (round 9, VERDICT r8 #3): ``recover_bands="auto"`` —
-    when the guard fires, recovery runs with the session-configurable
-    ``spark.bdps.semanticRecoverBands`` (default 4) ×
-    ``spark.bdps.semanticRecoverBits`` (default 8), the exact
-    configuration whose variant-pair recall measured 0.0 → 1.0 at 50k
-    flood scale (SCALE.md "Guard recall when it fires";
-    ``dd_semantic_recovered`` value-hashes it end to end). Pass
-    ``recover_bands=0`` to pin the pure-star fired semantics
+    **Default**: ``recover_bands=4`` × ``recover_bits=8`` — when the
+    guard fires, recovery runs with the configuration whose variant-pair
+    recall measured 0.0 → 1.0 at 50k flood scale (SCALE.md "Guard recall
+    when it fires"; ``dd_semantic_recovered`` value-hashes it end to
+    end). Pass ``recover_bands=0`` to pin the pure-star fired semantics
     (``dd_semantic_capped`` does — its oracle models the star alone).
-    Set the session confs to tune without touching call sites.
 
     **The probe is EAGER** (ADVICE r7): with ``cluster_cap`` set,
     constructing the result runs the assignment jobs through the probe's
@@ -719,18 +715,6 @@ def semantic_dedup(
 
     Nothing corpus-sized is broadcast; no Python; the only driver-side
     action is the probe's bounded isEmpty()."""
-    if recover_bands == "auto":
-        recover_bands = int(
-            embeddings.sparkSession.conf.get(
-                "spark.bdps.semanticRecoverBands", "4"
-            )
-        )
-    if recover_bits == "auto":
-        recover_bits = int(
-            embeddings.sparkSession.conf.get(
-                "spark.bdps.semanticRecoverBits", "8"
-            )
-        )
     if recover_bands > 0 and recover_bands * recover_bits > 63:
         # lsh_bucket_col packs the sign bits into ONE signed long; bit 63
         # would overflow the literal — fail at call time, not only when
@@ -1011,8 +995,8 @@ def dedup_delta_semantic(
     emb_col: str = "embedding",
     collapse_exact: bool = True,
     cluster_cap: int | None = 1024,
-    recover_bands: int | str = "auto",
-    recover_bits: int | str = "auto",
+    recover_bands: int = 4,
+    recover_bits: int = 8,
 ) -> DataFrame:
     """SEMANTIC incremental dedup (VERDICT r7 #8) — the embedding twin of
     :func:`operators.dedup.dedup_delta_near`: drop rows of ``new_df``

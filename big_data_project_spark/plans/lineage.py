@@ -1,4 +1,4 @@
-"""Pluggable lineage-cut strategy (VERDICT r7 #5).
+"""Pluggable lineage-cut strategy.
 
 Every expensive subtree the engine references from several plan branches
 (MinHash signatures, semantic-dedup assignments, PQ codebooks, …) and
@@ -16,19 +16,15 @@ decision, so every cut site in the package routes through
   repo's test/bench target, where executor == driver and the failure
   domain is the whole process anyway). On a real multi-node cluster an
   executor loss makes those blocks unrecoverable and FAILS THE JOB —
-  which is why the other two modes exist.
+  which is why ``reliable`` exists.
 - ``reliable``: ``DataFrame.checkpoint`` — same single-scan semantics,
   blocks written to the SparkContext checkpoint directory (HDFS/S3-
   durable on a cluster), survives executor loss. Requires a checkpoint
   dir: set it with ``sc.setCheckpointDir(...)`` or the companion conf
   ``spark.bdps.checkpointDir`` (applied lazily on first cut).
-- ``persist``: ``persist(MEMORY_AND_DISK)`` — re-execution is avoided
-  while the blocks live, and a lost block is RECOMPUTED from lineage
-  instead of failing the job (lineage is NOT truncated). Best when no
-  durable checkpoint dir exists. Caveat: because lineage is kept,
-  iterative call sites (graph/pointer-jumping loops) still grow their
-  logical plan with each iteration — analysis time creeps up at high
-  iteration counts; prefer ``reliable`` there.
+
+Both modes truncate lineage, so iterative call sites keep a bounded
+plan at any iteration count.
 
 Call sites use the chainable form ``df.transform(lineage_cut)`` (lazy)
 or ``df.transform(lineage_cut, eager=True)``; the mode is read per call,
@@ -43,7 +39,7 @@ from pyspark.sql import DataFrame
 
 CONF_KEY = "spark.bdps.lineageCut"
 CHECKPOINT_DIR_KEY = "spark.bdps.checkpointDir"
-_MODES = ("local", "reliable", "persist")
+_MODES = ("local", "reliable")
 
 
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -51,7 +47,7 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     strategy (see module docstring). ``eager`` materializes now instead
     of at the first downstream action.
 
-    Contract for every mode: ``eager=True`` must execute a Dataset
+    Contract for both modes: ``eager=True`` must execute a Dataset
     action over ``df``'s own plan before returning. ``Observation``
     callers depend on it — connected components' convergence loop
     (operators/dedup.py) reads ``obs.get`` right after an eager cut, and
@@ -82,11 +78,4 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
         return df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(
             eager=eager
         )
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
-        return out
     raise ValueError(f"{CONF_KEY} must be one of {_MODES}, got {mode!r}")

@@ -19,11 +19,7 @@ splits to >= the floor (every real at-scale scan: a 100 TB table plans
 thousands of file splits), it is a NO-OP — the plan is returned
 untouched, so this never adds a shuffle to the at-scale path.
 
-The floor comes from one session conf so deployments can tune or
-disable it:
-
-``spark.bdps.inputParallelismFloor`` = ``auto`` (default: the session's
-``sc.defaultParallelism``) | ``off`` | an integer floor.
+The floor is the session's ``sc.defaultParallelism``.
 
 Local frames (``df.isLocal`` — literal query rows, broadcast seeds) are
 never spread: shuffling a one-row relation buys nothing.
@@ -33,23 +29,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-CONF_KEY = "spark.bdps.inputParallelismFloor"
-
 
 def spread_input(df: DataFrame, *keys: str) -> DataFrame:
     """Repartition ``df`` up to the session's parallelism floor when (and
     only when) its planned input parallelism is below it. ``keys`` —
     optional column names to hash-partition on (skip the round-robin
     path's sort-before-repartition); no keys = round-robin."""
-    spark = df.sparkSession
-    mode = str(spark.conf.get(CONF_KEY, "auto"))
-    if mode == "off":
-        return df
     if df.isLocal():
         return df
-    target = (
-        spark.sparkContext.defaultParallelism if mode == "auto" else int(mode)
-    )
+    target = df.sparkSession.sparkContext.defaultParallelism
     if target <= 1:
         return df
     try:

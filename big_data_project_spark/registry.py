@@ -740,8 +740,8 @@ _WINDOW_SWAPS = [
     # (CNBC file1+file2). Stays value-hashed past-window in the sweep.
     ("c4_union_all", "mt_scd2_orders"),
     # round-10 (VERDICT r9 #2): the PRODUCTION-DEFAULT semantic-dedup
-    # semantics get driver-grade green. Since r9 the default is
-    # recover_bands="auto", but the only in-window semantic row
+    # semantics get driver-grade green. The default is 4x8 recovery
+    # bands, but the only in-window semantic row
     # (dd_semantic_capped, kept) pins recover_bands=0 —
     # dd_semantic_recovered value-hashes the full recovered chain
     # (fired guard + sign-LSH recovery banding, judge-audit green twice)
@@ -4211,7 +4211,7 @@ def tx_bpe_vocab(spark, sf_dir):
     return toks.groupBy("token").agg(F.count("*").cast("long").alias("n"))
 
 
-#: md5 feature-hash bucket of token `tk` in [0, 1024) — text.hash_bucket's
+#: md5 feature-hash bucket of token `tk` in [0, 1024) — text.feature_bucket's
 #: SQL mirror.
 _CLS_BUCKET = _HEX_SEG.format(a=1, b=16).replace("hx", "md5(tk)") + " % 1024"
 
@@ -4643,8 +4643,8 @@ def dd_semantic_capped(spark, sf_dir):
             threshold=0.4,
             cluster_cap=60,
             # this row pins the PURE star topology (its oracle models the
-            # star alone); production default is recover_bands="auto"
-            # since r9 — dd_semantic_recovered pins the recovered output
+            # star alone); the production default is 4x8 recovery
+            # bands — dd_semantic_recovered pins the recovered output
             recover_bands=0,
         )
 

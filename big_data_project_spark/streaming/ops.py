@@ -287,8 +287,8 @@ def _warn_equal_ts_collisions(
     batch_df: DataFrame, key: str, ts_col: str, attrs: list[str],
     epoch_id: int,
 ) -> bool:
-    """Feed-contract probe (VERDICT r9 #6; default-ON since r11, opt out
-    with ``check_feed=False``): strict-increasing ts per key is the
+    """Feed-contract probe run on every scd2 sink trigger: strict-
+    increasing ts per key is the
     recommended CDC feed contract — ACROSS batches the epoch tags keep
     equal-ts flip-flops apart, but WITHIN one batch two updates for the
     same key at the same ts with DIFFERENT attrs collapse to one
@@ -303,7 +303,7 @@ def _warn_equal_ts_collisions(
     shape) are NOT flagged: collapsing them loses nothing.
 
     Returns True when the batch is EMPTY (row count 0) — the sinks use
-    this instead of a separate ``batch_df.isEmpty()`` job (r12)."""
+    this instead of a separate ``batch_df.isEmpty()`` job."""
     import warnings
 
     # struct-wrapped distinct: count(DISTINCT a, b, ...) silently drops
@@ -355,7 +355,6 @@ def scd2_sink(
     key: str,
     ts_col: str,
     attrs: list[str],
-    check_feed: bool = True,
 ):
     """T7d: streaming SCD2 — each micro-batch of dimension changes lands
     on the persisted version HISTORY via maintenance.scd2_apply (latest-ts
@@ -375,13 +374,11 @@ def scd2_sink(
     valid_from); WITHIN a batch scd2_apply collapses to the latest ts —
     and if one batch holds conflicting same-key same-ts updates, ONE
     ARBITRARY WINNER survives and the losing version is silently absent
-    from the history. That one-winner collapse is why the per-batch
-    equal-ts collision probe (:func:`_warn_equal_ts_collisions`) is ON
-    by default (VERDICT r10 #5): it costs one dimension-churn-sized
-    grouped aggregation per trigger and warns with the conflicting
-    group/excess-version counts. Pass ``check_feed=False`` to opt out —
-    e.g. when benchmarking trigger latency (tools/scd2_churn_bench.py
-    does, to keep its metric comparable across rounds). History rewrite
+    from the history. That one-winner collapse is why every trigger
+    runs the equal-ts collision probe (:func:`_warn_equal_ts_collisions`):
+    it costs one dimension-churn-sized grouped aggregation per trigger,
+    warns with the conflicting group/excess-version counts, and its row
+    count doubles as the empty-batch check. History rewrite
     per trigger is the dim-table trade, same as ``upsert_sink``;
     append-heavy facts belong in the plain parquet sink."""
     from big_data_project_spark.operators.maintenance import (
@@ -393,14 +390,10 @@ def scd2_sink(
 
     def do_apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # no-data triggers must not churn-rewrite the history. With the
-        # feed probe on, its aggregation carries the row count, so the
-        # empty check rides the SAME job (r12, one batch pass per trigger
-        # instead of two); probe off keeps the cheap limit-1 check.
-        if check_feed:
-            if _warn_equal_ts_collisions(batch_df, key, ts_col, attrs, epoch_id):
-                return
-        elif batch_df.isEmpty():
+        # no-data triggers must not churn-rewrite the history; the feed
+        # probe's aggregation carries the row count, so the empty check
+        # rides the same job
+        if _warn_equal_ts_collisions(batch_df, key, ts_col, attrs, epoch_id):
             return
         recover_interrupted_swap(spark, target_path)
         if path_exists(spark, target_path):
@@ -430,7 +423,6 @@ def scd2_sink_incremental(
     key: str,
     ts_col: str,
     attrs: list[str],
-    check_feed: bool = True,
 ):
     """T7d at scale: the O(dimension)-per-batch SCD2 sink. ``scd2_sink``
     rewrites the FULL history every trigger — O(history), which grows
@@ -485,9 +477,8 @@ def scd2_sink_incremental(
     differ, so both survive. (Within ONE batch, equal-ts updates for a
     key collapse to a single arbitrary winner in scd2_apply —
     strictly-increasing ts per key remains the recommended feed
-    contract; the per-batch probe that WARNS when a batch holds
-    conflicting same-key same-ts updates is ON by default since r11,
-    ``check_feed=False`` to opt out — see
+    contract; every trigger runs the probe that WARNS when a batch holds
+    conflicting same-key same-ts updates — see
     :func:`_warn_equal_ts_collisions`. The probe matters doubly here:
     the crash-fragment containment walk below also LEANS on the
     strict-increasing-ts contract, so a violating feed now warns before
@@ -514,12 +505,9 @@ def scd2_sink_incremental(
 
     def do_apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # empty-check folded into the feed probe's aggregation when the
-        # probe is on (r12): one batch pass per trigger instead of two
-        if check_feed:
-            if _warn_equal_ts_collisions(batch_df, key, ts_col, attrs, epoch_id):
-                return
-        elif batch_df.isEmpty():
+        # empty-check folded into the feed probe's aggregation: one
+        # batch pass per trigger
+        if _warn_equal_ts_collisions(batch_df, key, ts_col, attrs, epoch_id):
             return
         recover_interrupted_swap(spark, open_path)
         if path_exists(spark, open_path):
@@ -597,7 +585,7 @@ def scd2_sink_incremental(
             # subtract that dir as a "fragment" and the re-closed
             # version would never republish (bounded loss: the row
             # exists once in history, but a version is missing). The
-            # default-on check_feed probe above warns on exactly the
+            # feed probe above warns on exactly the
             # feed shape that voids the contract, BEFORE this walk can
             # misread it — keep probe and walk in sync.
             for bid in sorted(batch_ids, reverse=True):
@@ -1413,8 +1401,8 @@ def semantic_dedup_stream(
     base_index_path: str | None = None,
     centroids_path: str | None = None,
     admit=None,
-    recover_bands: int | str = "auto",
-    recover_bits: int | str = "auto",
+    recover_bands: int = 4,
+    recover_bits: int = 8,
 ):
     """STREAMING semantic dedup (VERDICT r7 #8): a continuously-ingesting
     embedding stream deduped against everything admitted so far — the
@@ -1445,11 +1433,10 @@ def semantic_dedup_stream(
 
     ``recover_bands``/``recover_bits`` thread straight through to
     :func:`operators.vector.semantic_dedup`'s hot-cluster recovery
-    topology — default "auto" (r9, VERDICT r8 #3): if a batch floods a
-    cluster past ``cluster_cap``, the star guard runs WITH sign-LSH
-    recovery bands (session confs ``spark.bdps.semanticRecoverBands`` /
-    ``RecoverBits``, defaults 4×8, the measured 0.0→1.0 recall config)
-    instead of silently trading mixed-cluster recall."""
+    topology — default 4 bands × 8 bits, the measured 0.0→1.0 recall
+    config: if a batch floods a cluster past ``cluster_cap``, the star
+    guard runs WITH sign-LSH recovery bands instead of silently trading
+    mixed-cluster recall."""
     from big_data_project_spark.operators import vector as _vector
 
     def process(batch_df: DataFrame, batch_id: int):

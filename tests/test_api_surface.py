@@ -463,3 +463,44 @@ def test_rank_bounded_matches_window_rank(spark):
     plan = rank_bounded(df, [("score", "desc"), ("id", "asc")])._jdf \
         .queryExecution().executedPlan().toString()
     assert "Window" not in plan
+
+
+def test_removed_knobs_stay_removed(spark):
+    """One value per policy: the only session confs the package reads are
+    the lineage-cut deployment pair and the connected-components local
+    threshold, ``lineage_cut`` knows exactly two modes, and the deleted
+    keyword switches are rejected at the call instead of silently
+    accepted."""
+    import pathlib
+    import re
+
+    from big_data_project_spark.operators import dedup, maintenance
+    from big_data_project_spark.plans import lineage
+    from big_data_project_spark.streaming import ops
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "big_data_project_spark"
+    keys = {
+        m
+        for p in pkg.rglob("*.py")
+        for m in re.findall(r"spark\.bdps\.([A-Za-z]+)", p.read_text())
+    }
+    assert keys == {"lineageCut", "checkpointDir", "ccLocalThreshold"}
+
+    assert lineage._MODES == ("local", "reliable")
+    try:
+        spark.conf.set(lineage.CONF_KEY, "persist")
+        with pytest.raises(ValueError, match="lineageCut"):
+            lineage.lineage_cut(spark.range(3))
+    finally:
+        spark.conf.unset(lineage.CONF_KEY)
+
+    # the keyword is rejected before the body touches its (dummy) inputs
+    for sink in (ops.scd2_sink, ops.scd2_sink_incremental):
+        with pytest.raises(TypeError, match="check_feed"):
+            sink(None, "t", "ck", "k", "ts", ["a"], check_feed=False)
+    with pytest.raises(TypeError, match="skew_safe"):
+        dedup.duplicate_spans(None, skew_safe=False)
+    with pytest.raises(TypeError, match="broadcast_changed_keys"):
+        maintenance.scd2_apply(
+            None, None, "k", "ts", ["a"], broadcast_changed_keys=True
+        )

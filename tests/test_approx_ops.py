@@ -1029,7 +1029,7 @@ def test_semantic_dedup_recovery_restores_mixed_cluster_pairs(spark):
         star_only = sorted(
             r.vec_id
             # recover_bands=0 pins the pure-star fired semantics; the
-            # production default is "auto" recovery since r9
+            # production default is 4x8 recovery
             for r in vector.semantic_dedup(
                 df, recover_bands=0, **kw
             ).collect()
@@ -1079,11 +1079,11 @@ def test_semantic_dedup_recovery_restores_mixed_cluster_pairs(spark):
 
 def test_semantic_dedup_recovery_is_default_and_conf_tunable(spark):
     """VERDICT r8 #3: recovery bands must be reachable from production
-    paths without reading SCALE.md — the DEFAULT recover_bands="auto"
-    runs the measured 4×8 recovery when the guard fires (same output as
-    the exact cluster_cap=None greedy on this corpus), and the session
-    confs spark.bdps.semanticRecoverBands/Bits tune it (0 bands =
-    pinned pure-star semantics)."""
+    paths without reading SCALE.md — the DEFAULT recover_bands=4 ×
+    recover_bits=8 runs the measured recovery when the guard fires (same
+    output as the exact cluster_cap=None greedy on this corpus). The
+    recover_bands=0 pure-star leg is pinned in
+    test_semantic_dedup_recovery_restores_mixed_cluster_pairs."""
     import math
     import warnings
 
@@ -1108,13 +1108,6 @@ def test_semantic_dedup_recovery_is_default_and_conf_tunable(spark):
                 df, recover_bands=4, recover_bits=8, **kw
             ).collect()
         )
-        try:
-            spark.conf.set("spark.bdps.semanticRecoverBands", "0")
-            conf_off = sorted(
-                r.vec_id for r in vector.semantic_dedup(df, **kw).collect()
-            )
-        finally:
-            spark.conf.unset("spark.bdps.semanticRecoverBands")
     exact = sorted(
         r.vec_id
         for r in vector.semantic_dedup(
@@ -1122,7 +1115,6 @@ def test_semantic_dedup_recovery_is_default_and_conf_tunable(spark):
         ).collect()
     )
     assert default_out == explicit == exact == [0, 100]
-    assert conf_off == [0, 100, 101]  # star-only recall miss, by choice
 
 
 def test_dd_semantic_recovered_oracle_on_mixed_hot_cluster(spark, tmp_path):

@@ -44,6 +44,31 @@ def test_pagerank_matches_sequential_model(spark):
     assert got == _model_pagerank(edges)
 
 
+def test_pagerank_long_run_stays_bounded(spark):
+    """Bounded-iteration pin for the lazy per-iteration cut: each
+    iteration's rank table has one consumer, so a lazy localCheckpoint
+    still truncates lineage at construction. At 25 iterations the values
+    must equal the sequential model, and the analyzed plan must not grow
+    with the iteration count (a cut that kept lineage would make it ~5×
+    longer than at 5 iterations)."""
+    edges = [
+        ("a", "b"), ("b", "c"), ("c", "a"),
+        ("d", "a"), ("e", "a"), ("f", "a"),
+        ("a", "d"), ("c", "e"),
+    ]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+
+    def analyzed_len(iterations):
+        ranks = graph.pagerank(df, iterations=iterations)
+        return ranks, len(ranks._jdf.queryExecution().analyzed().toString())
+
+    long_run, long_len = analyzed_len(25)
+    _, short_len = analyzed_len(5)
+    got = {row["node"]: row["rank_pico"] for row in long_run.collect()}
+    assert got == _model_pagerank(edges, iterations=25)
+    assert long_len <= 1.5 * short_len, (long_len, short_len)
+
+
 def test_pagerank_cycle_is_uniform(spark):
     """On a pure cycle every node keeps 1/N of the mass (up to the defined
     floor truncation) — and all nodes are exactly equal."""

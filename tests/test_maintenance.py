@@ -311,9 +311,6 @@ def test_scd2_full_churn_no_mandatory_broadcast(spark):
     open_rows = [r for r in rows if r.valid_to is None]
     closed_rows = [r for r in rows if r.valid_to is not None]
     assert len(open_rows) == n and len(closed_rows) == n
-    # opt-in path still available for trickle loads
-    hinted = mt.scd2_apply(cur, upd, "id", "ts", ["tier"], broadcast_changed_keys=True)
-    assert plans.num_broadcast_hints(hinted) == 1
 
 
 def test_scd2_multi_update_batch_single_open_version(spark):

@@ -662,9 +662,9 @@ def test_lineage_cut_reliable_and_persist_modes_match_oracle(
     """VERDICT r7 #5: every lineage-cut site honors spark.bdps.lineageCut.
     Run the flagship dedup entry end-to-end under 'reliable'
     (checkpoint() to a tmp dir — the real-cluster mode where executor
-    loss must not kill the job) and 'persist', value-matching the DuckDB
-    oracle both times; 'local' is what every other test runs. Also pin
-    the conf validation error."""
+    loss must not kill the job), value-matching the DuckDB oracle;
+    'local' is what every other test runs. 'persist' is not a mode: it
+    and any other unknown value must fail the conf validation."""
     from big_data_project_spark.plans.lineage import (
         CHECKPOINT_DIR_KEY,
         CONF_KEY,
@@ -681,12 +681,11 @@ def test_lineage_cut_reliable_and_persist_modes_match_oracle(
         import os
 
         assert os.listdir(tmp_path / "ck")  # checkpoint blocks really wrote
-        spark.conf.set(CONF_KEY, "persist")
-        assert_matches_oracle(q.build(spark, sf_dir), duck, q.oracle)
-        spark.conf.set(CONF_KEY, "bogus")
         import pytest as _pt
 
-        with _pt.raises(ValueError, match="lineageCut"):
-            lineage_cut(spark.range(3))
+        for bad in ("persist", "bogus"):
+            spark.conf.set(CONF_KEY, bad)
+            with _pt.raises(ValueError, match="lineageCut"):
+                lineage_cut(spark.range(3))
     finally:
         spark.conf.set(CONF_KEY, "local")

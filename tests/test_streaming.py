@@ -625,14 +625,14 @@ def test_scd2_check_feed_warns_on_same_batch_equal_ts_flipflop(
     """VERDICT r9 #6 / r10 #5: the strict-increasing-ts-per-key feed
     contract was prose only — an equal-ts same-key conflict inside ONE
     batch still collapses to an arbitrary winner silently (epoch tags
-    only protect across batches). The per-batch probe is ON BY DEFAULT
-    since r11 (no flag needed — a deployer who reads nothing still gets
-    the warning): a batch holding (1, A, t) AND (1, B, t) must WARN,
+    only protect across batches). The per-batch probe runs on every
+    trigger (no flag — a deployer who reads nothing still gets the
+    warning): a batch holding (1, A, t) AND (1, B, t) must WARN,
     naming the conflicting-group count AND the excess-version count
     (ADVICE r10: the old kta−kt figure conflated them); exact duplicate
-    rows (the replay shape) must NOT warn; check_feed=False must
-    silence the probe. The output under the warning: exactly one of the
-    conflicting versions survives as the open row."""
+    rows (the replay shape) must NOT warn. The output under the
+    warning: exactly one of the conflicting versions survives as the
+    open row."""
     import warnings
 
     t1 = "2024-01-01 00:00:00"
@@ -648,7 +648,7 @@ def test_scd2_check_feed_warns_on_same_batch_equal_ts_flipflop(
     q = st.scd2_sink_incremental(
         spark.readStream.schema(b1.schema).parquet(src),
         str(tmp_path / "t"), str(tmp_path / "ck"),
-        "cust", "u_ts", ["seg"],  # default check_feed — must probe
+        "cust", "u_ts", ["seg"],
     )
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
@@ -681,19 +681,6 @@ def test_scd2_check_feed_warns_on_same_batch_equal_ts_flipflop(
         q2.processAllAvailable()
     q2.stop()
     assert [w for w in rec2 if "CONFLICTING same-ts" in str(w.message)] == []
-
-    # opt-out leg: the documented escape hatch (latency benches) must
-    # silence the probe even on a conflicting feed
-    q3 = st.scd2_sink(
-        spark.readStream.schema(b1.schema).parquet(src),
-        str(tmp_path / "t3"), str(tmp_path / "ck3"),
-        "cust", "u_ts", ["seg"], check_feed=False,
-    )
-    with warnings.catch_warnings(record=True) as rec3:
-        warnings.simplefilter("always")
-        q3.processAllAvailable()
-    q3.stop()
-    assert [w for w in rec3 if "CONFLICTING same-ts" in str(w.message)] == []
 
 
 def test_scd2_incremental_compaction_preserves_history(spark, tmp_path):

@@ -437,9 +437,8 @@ def main() -> int:
     ap.add_argument(
         "--recover-bands", type=int, default=4,
         help="sign-LSH recovery bands for fired semantic clusters — "
-        "default 4 matches the production recover_bands='auto' config "
-        "(r9); pass 0 to pin the pure-star guard "
-        "(round 8: the second witness topology; 0 = pure star)",
+        "default 4 matches semantic_dedup's default recover_bands; "
+        "pass 0 to pin the pure-star guard",
     )
     args = ap.parse_args()
 

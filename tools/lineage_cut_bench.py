@@ -10,7 +10,6 @@ warmup, median of 3) so a deployer can choose with numbers:
                   (fails the job on executor loss on a real cluster)
 - ``reliable``  — persist + checkpoint to a durable dir: survives
                   executor loss; pays one extra write of the cut subtree
-- ``persist``   — MEMORY_AND_DISK cache: recompute-on-loss, lineage kept
 
 Appends one ``lineage_cut_cost`` record to bench_history.jsonl:
 
@@ -32,7 +31,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-MODES = ("local", "reliable", "persist")
+MODES = ("local", "reliable")
 DEFAULT_QUERIES = "dd_near_dedup_lsh,dd_span_dedup,gr_pagerank"
 
 
@@ -48,7 +47,7 @@ def run_one(name: str, mode: str, sf_dir: str, n_runs: int) -> int:
     REGISTRY[name].build(spark, sf_dir).collect()  # warmup this plan
     times = []
     for _ in range(n_runs):
-        spark.catalog.clearCache()  # a persist left over would bias
+        spark.catalog.clearCache()  # a reliable-mode cache left over would bias
         t0 = time.monotonic()
         REGISTRY[name].build(spark, sf_dir).collect()
         times.append(time.monotonic() - t0)

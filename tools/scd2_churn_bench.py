@@ -76,11 +76,6 @@ def main() -> int:
     q = st.scd2_sink_incremental(
         spark.readStream.schema(schema).parquet(src),
         tgt, ck, "cust", "u_ts", ["seg"],
-        # probe off: check_feed defaulted ON in r11, but this tool
-        # measures trigger latency — keep the metric comparable with
-        # pre-r11 scd2_churn history rows (the feed here is clean and
-        # ts-monotonic by construction anyway)
-        check_feed=False,
     )
     lat, dirs_series, bytes_series = [], [], []
     compactions = 0
