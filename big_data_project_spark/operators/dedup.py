@@ -1919,9 +1919,10 @@ def duplicate_spans(
        groupBy collapses each island to (min_pos, max_pos + n - 1);
     4. per-doc rollup to span count / covered tokens / permille.
 
-    Everything is whole-stage-codegen Catalyst; memory per task is bounded by partition size, never by corpus or document
-    count. The hash substitutes for gram equality (a 64-bit collision
-    would merge two unrelated grams); at the paper's scale that chance is
+    Everything is whole-stage-codegen Catalyst; memory per task is bounded
+    by partition size, never by corpus or document count. The hash
+    substitutes for gram equality (a 64-bit collision would merge two
+    unrelated grams); at the paper's scale that chance is
     ~(grams²)/2⁶⁵ — accepted, as in the MinHash family above."""
     # input-parallelism floor before the tokenize+gram explode (r11,
     # guide §2.5): no-op whenever the scan already splits

@@ -288,9 +288,9 @@ def _warn_equal_ts_collisions(
     epoch_id: int,
 ) -> bool:
     """Feed-contract probe run on every scd2 sink trigger: strict-
-    increasing ts per key is the
-    recommended CDC feed contract — ACROSS batches the epoch tags keep
-    equal-ts flip-flops apart, but WITHIN one batch two updates for the
+    increasing ts per key is the recommended CDC feed contract — ACROSS
+    batches the epoch tags keep equal-ts flip-flops apart, but WITHIN
+    one batch two updates for the
     same key at the same ts with DIFFERENT attrs collapse to one
     arbitrary winner in scd2_apply, and nothing in the output says a
     version was dropped. This probe pays one batch-sized grouped
@@ -585,8 +585,8 @@ def scd2_sink_incremental(
             # subtract that dir as a "fragment" and the re-closed
             # version would never republish (bounded loss: the row
             # exists once in history, but a version is missing). The
-            # feed probe above warns on exactly the
-            # feed shape that voids the contract, BEFORE this walk can
+            # feed probe above warns on exactly the feed shape that
+            # voids the contract, BEFORE this walk can
             # misread it — keep probe and walk in sync.
             for bid in sorted(batch_ids, reverse=True):
                 prev = spark.read.parquet(
