@@ -25,6 +25,7 @@ from big_data_project_spark.plans.lineage import lineage_cut
 from big_data_project_spark.plans.parallelism import spread_input
 
 from big_data_project_spark import io
+from big_data_project_spark import refdata
 from big_data_project_spark import streaming
 from big_data_project_spark.operators import (
     cleaning,
@@ -2871,7 +2872,13 @@ def st_dedup_events(spark, sf_dir):
 # engine's pipelines (ref py:203-311 SEC, py:99-174+334-345 social).
 # ===========================================================================
 
-_REF_DIR = "/root/reference"
+_REF_DIR = refdata.root()
+
+
+def _ref_sql(sql: str) -> str:
+    """Oracle SQL reading the resolved data root: ``$REF_DIR`` becomes
+    :data:`_REF_DIR` (plain replace — the SQL holds DuckDB struct braces)."""
+    return sql.replace("$REF_DIR", _REF_DIR.replace("'", "''"))
 
 
 @register(
@@ -2879,9 +2886,9 @@ _REF_DIR = "/root/reference"
     # Full hash-matched oracle over the SAME file DuckDB reads directly.
     # Two-arg trim(x, ' ') mirrors Spark's ASCII-space-only F.trim (DuckDB's
     # one-arg trim strips unicode whitespace — the feed has a U+00A0 ticker).
-    oracle=r"""
+    oracle=_ref_sql(r"""
     WITH raw AS (
-      SELECT * FROM read_csv('/root/reference/SEC_filings.csv',
+      SELECT * FROM read_csv('$REF_DIR/SEC_filings.csv',
                              header=true, quote='"', escape='"',
                              all_varchar=true)
     ),
@@ -2914,40 +2921,25 @@ _REF_DIR = "/root/reference"
            price, location, exchange, currency,
            concat_ws('_', ticker, company_name) AS record_id
     FROM dedup WHERE rn = 1
-    """,
+    """),
     note=(
-        "runs pipelines.sec on the reference's actual SEC_filings.csv "
-        "(2,613 RFC-4180 records; the reference's line-split read mangles "
-        "9 quoted-newline rows into the ipynb's '2,622'); invariants also "
-        "pinned in tests/test_pipelines.py goldens"
+        "runs pipelines.sec on SEC_filings.csv from refdata.root(): the "
+        "reference's own file where its checkout exists (2,613 RFC-4180 "
+        "records; the reference's line-split read mangles 9 quoted-newline "
+        "rows into the ipynb's '2,622'), else the committed seed-42 fixture "
+        "of the same shape; real-data invariants pinned in "
+        "tests/test_pipelines.py goldens"
     ),
 )
 def pl_sec_real_data(spark, sf_dir):
     """The reference's canonical ETL (py:203-311) over its real input:
     ingest → clean (money parse fixes the cast-to-null bug, ipynb cell 22)
-    → metadata+record_id (fixes the null-id bug, cell 23). Falls back to a
-    3-row embedded fixture when the reference checkout is absent."""
-    import os
-
+    → metadata+record_id (fixes the null-id bug, cell 23). Reads the
+    reference's SEC_filings.csv where the checkout exists, else the
+    committed reference-shaped fixture (``refdata.root()``)."""
     from big_data_project_spark.pipelines import sec
 
-    path = f"{_REF_DIR}/SEC_filings.csv"
-    if not os.path.exists(path):  # pragma: no cover - reference always present
-        raw = io.from_rows(
-            spark,
-            [
-                ("AAA", "ALPHA INC", "Tech", "Equity", "1,234.50", "1.0",
-                 "1,234.50", "10.00", "12.34", "US", "NYSE", "USD", "1",
-                 "USD", "-"),
-                ("BBB", "BETA CORP", None, "Equity", "-", "2.0", "5,000.00",
-                 "20.00", "250.00", "US", "NYSE", "USD", "1", "USD", "-"),
-                ("AAA", "ALPHA INC", "Tech", "Equity", "1,234.50", "1.0",
-                 "1,234.50", "10.00", "12.34", "US", "NYSE", "USD", "1",
-                 "USD", "-"),
-            ],
-            sec.RAW_SCHEMA,
-        )
-        return sec.extract_metadata(sec.clean(raw))
+    path = f"{_REF_DIR}/{refdata.SEC_CSV}"
     return sec.extract_metadata(sec.clean(sec.ingest(spark, path)))
 
 
@@ -2958,13 +2950,13 @@ def pl_sec_real_data(spark, sf_dir):
 # integer range). Shared by pl_social_real_data (file-reader ingestion) and
 # s5_s6_connector_feeds (Python Data Source ingestion): one oracle, two
 # ingestion paths that must land identically.
-_SOCIAL_DOCS_ORACLE = r"""
+_SOCIAL_DOCS_ORACLE = _ref_sql(r"""
     WITH cnbc_raw AS (
-      SELECT * FROM read_json('/root/reference/CNBC_financial_news_1.json',
+      SELECT * FROM read_json('$REF_DIR/CNBC_financial_news_1.json',
           format='newline_delimited',
           columns={url: 'VARCHAR', title: 'VARCHAR', date: 'VARCHAR', content: 'VARCHAR'})
       UNION ALL
-      SELECT * FROM read_json('/root/reference/CNBC_financial_articles_2.json',
+      SELECT * FROM read_json('$REF_DIR/CNBC_financial_articles_2.json',
           format='newline_delimited',
           columns={url: 'VARCHAR', title: 'VARCHAR', date: 'VARCHAR', content: 'VARCHAR'})
     ),
@@ -2978,7 +2970,7 @@ _SOCIAL_DOCS_ORACLE = r"""
              coalesce(try_strptime("Post_Time", '%Y-%m-%dT%H:%M:%S.%fZ'),
                       try_strptime("Post_Time", '%Y-%m-%d %H:%M:%S')) AS ts,
              CAST(NULL AS VARCHAR) AS body, 'reddit' AS source
-      FROM read_json('/root/reference/reddit_posts.json',
+      FROM read_json('$REF_DIR/reddit_posts.json',
           format='newline_delimited',
           columns={Title: 'VARCHAR', URL: 'VARCHAR', Upvotes: 'INTEGER',
                    Comments_Count: 'INTEGER', Post_Time: 'VARCHAR'})
@@ -3000,36 +2992,32 @@ _SOCIAL_DOCS_ORACLE = r"""
            url, ts, text, source,
            CAST(length(text) AS BIGINT) AS n_chars
     FROM withhash
-    """
+    """)
 
 
 @register(
     "pl_social_real_data",
     oracle=_SOCIAL_DOCS_ORACLE,
     note=(
-        "runs pipelines.social on the reference's CNBC (20+19 docs) and "
-        "reddit (500 posts) JSON feeds; goldens in tests/test_pipelines.py"
+        "runs pipelines.social on the CNBC (20+19 docs) and reddit (500 "
+        "posts) JSON feeds from refdata.root(): the reference's own files "
+        "where its checkout exists, else the committed seed-42 fixture of "
+        "the same shape; real-data goldens in tests/test_pipelines.py"
     ),
 )
 def pl_social_real_data(spark, sf_dir):
     """The reference's social/news normalization (py:99-174, py:334-345)
-    over its real inputs: two CNBC JSON-lines files unioned by name, reddit
+    over its inputs (``refdata.root()``: the reference's feeds, else the
+    committed fixture): two CNBC JSON-lines files unioned by name, reddit
     PRAW dumps with the two-format timestamp parse, unified into the
     engine's documents schema."""
-    import os
-
     from big_data_project_spark.pipelines import social
 
-    cnbc = [
-        f"{_REF_DIR}/CNBC_financial_news_1.json",
-        f"{_REF_DIR}/CNBC_financial_articles_2.json",
-    ]
-    reddit = f"{_REF_DIR}/reddit_posts.json"
-    if not all(os.path.exists(p) for p in cnbc + [reddit]):
-        # pragma: no cover - reference always present in this environment
-        raise FileNotFoundError("reference data not found")
     return social.unify(
-        social.load_cnbc(spark, *cnbc), social.load_reddit(spark, reddit)
+        social.load_cnbc(
+            spark, f"{_REF_DIR}/{refdata.CNBC_1}", f"{_REF_DIR}/{refdata.CNBC_2}"
+        ),
+        social.load_reddit(spark, f"{_REF_DIR}/{refdata.REDDIT}"),
     )
 
 
@@ -3044,31 +3032,25 @@ def pl_social_real_data(spark, sf_dir):
 def s5_s6_connector_feeds(spark, sf_dir):
     """S5/S6 as REGISTERED SPARK SOURCES (Python Data Source API):
     ``spark.read.format('cnbc_articles')`` / ``format('reddit_posts')`` in
-    fixture mode over the reference's own feed files, normalized by the
+    fixture mode over the feed files of ``refdata.root()`` (the
+    reference's own, else the committed fixture), normalized by the
     same pipelines.social stages — hash-identical to the file-reader
     pipeline under the shared oracle. The live mode of the same readers
     fans per-article fetches across executors (sources/connectors.py),
     replacing the reference's driver-side fetch loop (py:10-31,
     py:99-122)."""
-    import os
-
     from big_data_project_spark.pipelines import social
     from big_data_project_spark.sources import register_connectors
 
-    cnbc = [
-        f"{_REF_DIR}/CNBC_financial_news_1.json",
-        f"{_REF_DIR}/CNBC_financial_articles_2.json",
-    ]
-    reddit = f"{_REF_DIR}/reddit_posts.json"
-    if not all(os.path.exists(p) for p in cnbc + [reddit]):
-        # pragma: no cover - reference always present in this environment
-        raise FileNotFoundError("reference data not found")
     register_connectors(spark)
+    cnbc = f"{_REF_DIR}/{refdata.CNBC_1},{_REF_DIR}/{refdata.CNBC_2}"
     cn = social.normalize_cnbc(
-        spark.read.format("cnbc_articles").option("path", ",".join(cnbc)).load()
+        spark.read.format("cnbc_articles").option("path", cnbc).load()
     )
     rd = social.normalize_reddit(
-        spark.read.format("reddit_posts").option("path", reddit).load()
+        spark.read.format("reddit_posts")
+        .option("path", f"{_REF_DIR}/{refdata.REDDIT}")
+        .load()
     )
     return social.unify(cn, rd)
 

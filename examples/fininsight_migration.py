@@ -2,15 +2,20 @@
 
 Every top-level action of ``ai_powered_financial_analysis.py`` (the
 FinInsight reference), in the same order, expressed as engine calls. Run it
-offline against the reference's own data files:
+offline:
 
     python examples/fininsight_migration.py [out_dir]
+
+It reads the four input files from ``refdata.root()``: the reference's own
+data files where its checkout exists (2,613 SEC records, 538 unified social
+documents), else the committed seed-42 reference-shaped fixtures in
+``big_data_project_spark/refdata`` (FIXTURES.md §B1-B3).
 
 Mapping (reference line → engine call):
 
   py:10-31   fetch_cnbc_article_links + article fetch  → spark.read.format("cnbc_articles")
              (live mode needs network; this script uses the connector's
-             fixture mode over the reference's own JSON captures)
+             fixture mode over the JSON captures under REF)
   py:99-122  fetch_subreddit_posts (PRAW)              → spark.read.format("reddit_posts")
   py:203-226 ingest_file (SEC csv)                     → pipelines.sec.ingest
   py:228-265 data_cleaning                             → pipelines.sec.clean
@@ -39,13 +44,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from big_data_project_spark import io, plugins
+from big_data_project_spark import io, plugins, refdata
 from big_data_project_spark.operators import rag, vector
 from big_data_project_spark.pipelines import sec, social
 from big_data_project_spark.session import get_spark
 from big_data_project_spark.sources import register_connectors
 
-REF = "/root/reference"
+REF = refdata.root()
 QUESTION = "What are the risks of Amazon's $15B warehouse expansion?"
 
 

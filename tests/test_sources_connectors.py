@@ -7,13 +7,15 @@ import json
 
 import pytest
 
-from big_data_project_spark import io
+from big_data_project_spark import io, refdata
 from big_data_project_spark.pipelines import social
 from big_data_project_spark.sources import register_connectors
 
-CNBC_1 = "/root/reference/CNBC_financial_news_1.json"
-CNBC_2 = "/root/reference/CNBC_financial_articles_2.json"
-REDDIT = "/root/reference/reddit_posts.json"
+# the reference's feed files where its checkout exists, else the committed
+# reference-shaped fixture (FIXTURES.md §B2/§B3: 20 + 19 articles, 500 posts)
+CNBC_1 = f"{refdata.root()}/{refdata.CNBC_1}"
+CNBC_2 = f"{refdata.root()}/{refdata.CNBC_2}"
+REDDIT = f"{refdata.root()}/{refdata.REDDIT}"
 
 
 def _sorted_rows(df):

@@ -11,6 +11,12 @@ and partitionings).
 
     python tools/gen_testdata.py --sf 1 --out testdata_local/sf1
     python tools/gen_testdata.py --sf 1 --skew-zipf 1.2 --out testdata_local/sf1skew
+    python tools/gen_testdata.py --refdata big_data_project_spark/refdata
+
+``--refdata DIR`` instead writes the four reference-shaped input files of
+FIXTURES.md §B1-B3 (pure Python, seed 42, byte-deterministic); the
+committed copy in ``big_data_project_spark/refdata`` is that command's
+output.
 
 ``--skew-zipf`` additionally makes ``orders.o_custkey`` zipfian (exponent
 s): the hottest customer takes ~1/H share of ALL orders — the adversarial
@@ -27,8 +33,11 @@ itself is read-only by contract.
 from __future__ import annotations
 
 import argparse
+import json
 import math
 import os
+import random
+from datetime import datetime, timedelta
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -350,10 +359,282 @@ def gen(
     write(vecs, "embeddings")
 
 
+# ---------------------------------------------------------------------------
+# Reference-shaped fixtures (FIXTURES.md §B1-B3): the four input files of the
+# FinInsight reference, synthesized in pure Python from one seeded
+# random.Random, so the bytes are a function of the seed alone.
+# ---------------------------------------------------------------------------
+
+#: the feed's header, spelled out here rather than taken from
+#: pipelines.sec.RAW_COLUMNS so the fixture does not follow the code it tests
+_SEC_HEADER = (
+    "Ticker", "Name", "Sector", "Asset Class", "Market Value", "Weight (%)",
+    "Notional Value", "Quantity", "Price", "Location", "Exchange",
+    "Currency", "FX Rate", "Market Currency", "Accrual Date",
+)
+_SEC_WORDS = (
+    "ALPHA BEACON CEDAR DELTA EMBER FALCON GRANITE HARBOR IRON JUNIPER "
+    "KESTREL LUMEN MERIDIAN NORTHWIND ORION PINNACLE QUARRY RIVERSTONE SUMMIT "
+    "TRIDENT UNION VERTEX WILLOW XENON YARROW ZENITH ATLAS BOREAL COBALT "
+    "DUNE ECHO FRONTIER GALLEON HELIX INDIGO JASPER KEYSTONE LANTERN MOSAIC "
+    "NEXUS"
+).split()
+_SEC_SUFFIXES = (
+    "INC", "CORP", "CO", "PLC", "LTD", "HOLDINGS INC", "GROUP INC",
+    "INC CLASS A", "CORP CLASS B", "N.V.", "S.A.", "& CO INC", "INC.",
+)
+_SECTORS = (
+    "Information Technology", "Health Care", "Financials",
+    "Consumer Discretionary", "Communication", "Industrials",
+    "Consumer Staples", "Energy", "Utilities", "Real Estate", "Materials",
+)
+_LOCATIONS = (
+    ("United States", "NASDAQ"), ("United States", "New York Stock Exchange Inc."),
+    ("United States", "Cboe BZX"), ("Canada", "Toronto Stock Exchange"),
+    ("United Kingdom", "London Stock Exchange"), ("Ireland", "New York Stock Exchange Inc."),
+    ("Switzerland", "SIX Swiss Exchange"), ("Netherlands", "NASDAQ"),
+)
+_CASH = (
+    ("USD CASH", "Cash"), ("CASH COLLATERAL USD", "Cash Collateral and Margins"),
+    ("BLK CSH FND TREASURY SL AGENCY", "Money Market"),
+    ("S&P500 EMINI JUN 25", "Futures"),
+)
+
+
+def _money(rng, lo_exp, hi_exp):
+    return f"{10 ** rng.uniform(lo_exp, hi_exp):,.2f}"
+
+
+def _sec_rows(rng, n_records):
+    """B1: 2,613 records, nine with a quoted newline in Name (a line-split
+    read sees 2,622 data lines); comma-formatted money, '-' sentinels, null
+    sectors and weights, a U+00A0 ticker, duplicate (Ticker, Name) pairs
+    and names that collide only after normalization."""
+    rows, seen, keys, nbsp_done = [], set(), [], False
+    multiline = set(rng.sample(range(n_records), 9))
+    for i in range(n_records):
+        u = rng.random()
+        if u < 0.02:  # cash / derivative holdings carry the '-' ticker
+            name, asset = rng.choice(_CASH)
+            ticker, sector = "-", "Cash and/or Derivatives"
+            location, exchange = "United States", "NO MARKET (E.G. UNLISTED)"
+        elif u < 0.03 and keys:  # a later line for an earlier holding
+            ticker, name = rng.choice(keys)
+            if rng.random() < 0.5:  # same key only after normalization
+                name = name[:-1] if name.endswith(".") else name + "."
+            asset, sector = "Equity", rng.choice(_SECTORS)
+            location, exchange = rng.choice(_LOCATIONS)
+        else:
+            w1, w2 = rng.choice(_SEC_WORDS), rng.choice(_SEC_WORDS)
+            name = f"{w1} {w2} {rng.choice(_SEC_SUFFIXES)}"
+            ticker = (w1[: rng.randint(1, 3)] + w2[: rng.randint(1, 2)])[:5]
+            v = rng.random()
+            if v < 0.08:
+                name = name.title()
+            elif v < 0.12:
+                name = name.replace(f"{w1} ", f"<b>{w1}</b> ", 1)
+            elif v < 0.15:
+                name = name.replace(" ", ", ", 1) + " (THE)"
+            elif v < 0.17:
+                name = f"{w1}'S {w2} &amp; {rng.choice(_SEC_SUFFIXES)}"
+            if rng.random() < 0.02:
+                ticker = f" {ticker} "
+            if i in multiline:
+                name = f"{name}\nCLASS {rng.choice('ABC')}"
+            if not nbsp_done and i >= 100:  # the feed's one U+00A0 ticker
+                ticker, nbsp_done = f"{ticker.strip()}\u00a0", True
+            asset = "Equity"
+            r = rng.random()
+            sector = None if r < 0.03 else "-" if r < 0.04 else rng.choice(_SECTORS)
+            location, exchange = rng.choice(_LOCATIONS)
+            keys.append((ticker, name))
+        r = rng.random()
+        if r < 0.01:
+            mv = "-"
+        elif r < 0.05:
+            mv = f"{rng.uniform(0.01, 0.99):.2f}"  # plain, no separators
+        else:
+            mv = _money(rng, 3, 11)
+        weight = None if rng.random() < 0.02 else f"{rng.uniform(0.0, 6.0):.2f}"
+        qty = _money(rng, 1, 8)
+        price = rng.uniform(0.5, 900.0)
+        # no two rows tie on the dedup order (Market Value, Quantity,
+        # Price), so every engine keeps the same row per key
+        while (mv, qty, f"{price:.2f}") in seen:
+            price += 0.01
+        seen.add((mv, qty, f"{price:.2f}"))
+        accrual = "Jan 01, 1970" if rng.random() < 0.05 else "-"
+        rows.append((
+            ticker, name, sector, asset, mv, weight, mv, qty, f"{price:.2f}",
+            location, exchange, "USD", "1", "USD", accrual,
+        ))
+    return rows
+
+
+def _csv_line(fields):
+    return ",".join(
+        "" if f is None else '"' + f.replace('"', '""') + '"' for f in fields
+    )
+
+
+_CNBC_SUBJECTS = (
+    ("Amazon", "AMZN", "Amazon's $15B warehouse expansion"),
+    ("Apple", "AAPL", "Apple's iPhone tariff exposure"),
+    ("Nvidia", "NVDA", "Nvidia's export-license charge"),
+    ("Tesla", "TSLA", "Tesla's delivery slump"),
+    ("Microsoft", "MSFT", "Microsoft's data-center pullback"),
+    ("JPMorgan", "JPM", "JPMorgan's record trading quarter"),
+    ("Netflix", "NFLX", "Netflix's price increase"),
+    ("Alphabet", "GOOGL", "Alphabet's search antitrust remedy"),
+    ("Meta", "META", "Meta's AI capex plan"),
+    ("UnitedHealth", "UNH", "UnitedHealth's guidance cut"),
+    ("Boeing", "BA", "Boeing's China jet returns"),
+    ("Walmart", "WMT", "Walmart's price rollback"),
+    ("Goldman Sachs", "GS", "Goldman Sachs' buyback"),
+)
+_CNBC_ANGLES = (
+    "What investors should know about {s}",
+    "{s}: analysts weigh the risks",
+    "Stocks making the biggest moves midday: {t}, and more",
+    "Here's why {c} shares are moving after {s}",
+    "{c} CEO defends strategy as Wall Street questions {s}",
+    "Jim Cramer says {c} is a buy despite {s}",
+)
+_CNBC_SENTENCES = (
+    "{c} shares fell {p}% in premarket trading on {d}.",
+    "Analysts at several banks said {s} could weigh on margins for the next {n} quarters.",
+    "The company said it expects capital spending of about ${b} billion this year.",
+    "Investors have been watching tariffs, interest rates and consumer demand closely.",
+    "“We remain confident in our long-term plan,” a {c} spokesperson said.",
+    "The stock is down {p}% year to date, compared with a {q}% decline in the S&P 500.",
+    "Risks include higher labor costs, supply-chain delays and weaker freight volumes.",
+    "{c}’s results are due later this month, and guidance will be the focus.",
+    "Options traders priced in a move of roughly {p}% in either direction.",
+    "The Federal Reserve’s next decision could shift the outlook for {t} and its peers.",
+)
+
+
+def _cnbc_articles(rng, n_unique):
+    """B2: articles with mixed-case punctuated headlines, stringified
+    datetimes, 1-10 KB multi-paragraph bodies (some wrapped in HTML tags,
+    some null)."""
+    arts = []
+    for i in range(n_unique):
+        c, t, s = _CNBC_SUBJECTS[i % len(_CNBC_SUBJECTS)]
+        title = rng.choice(_CNBC_ANGLES).format(c=c, t=t, s=s)
+        day = rng.randint(1, 28)
+        slug = "".join(ch if ch.isalnum() else "-" for ch in title.lower()).strip("-")
+        url = f"https://www.cnbc.com/2025/04/{day:02d}/{slug}-{i}.html"
+        hms = "00:00:00" if rng.random() < 0.3 else (
+            f"{rng.randint(0, 23):02d}:{rng.randint(0, 59):02d}:{rng.randint(0, 59):02d}"
+        )
+        html = rng.random() < 0.3
+        paras, size, target = [], 0, rng.randint(1024, 10 * 1024)
+        while size < target:
+            para = " ".join(
+                rng.choice(_CNBC_SENTENCES).format(
+                    c=c, t=t, s=s, d=f"April {day}", n=rng.randint(2, 6),
+                    p=f"{rng.uniform(0.5, 12):.1f}", q=f"{rng.uniform(1, 15):.1f}",
+                    b=rng.randint(5, 120),
+                )
+                for _ in range(rng.randint(3, 6))
+            )
+            if html:
+                link = f'<a href="https://www.cnbc.com/quotes/{t}/">{c}</a>'
+                para = f"<p>{para.replace(c, link, 1)}</p>"
+            paras.append(para)
+            size += len(para) + 2
+        content = None if rng.random() < 0.08 else "\n\n".join(paras)
+        arts.append({"url": url, "title": title, "date": f"2025-04-{day:02d} {hms}",
+                     "content": content})
+    return arts
+
+
+_REDDIT_TITLES = (
+    "{t} to the moon \U0001F680",
+    "Thoughts on {c}'s Q1 earnings?",
+    "DD: why {t} is undervalued (long post)",
+    "YOLO'd my savings into {t} calls \U0001F48E\U0001F64C",
+    "Is the market pricing in {s}?",
+    "{c} just dropped {p}% — buy the dip or run?",
+    "Loss porn: -{p}% on {t} puts \U0001F4C9",
+    "What's everyone's take on {s}??",
+    "Daily Discussion Thread for April {d}, 2025",
+    "{t} earnings play: straddle or strangle?",
+)
+_SUBREDDITS = ("wallstreetbets", "stocks", "investing", "StockMarket")
+
+
+def _reddit_posts(rng, n_posts):
+    """B3: 500 posts, both Post_Time formats, long-tailed counts, emoji in
+    titles and exactly one emoji-only title (normalizes to empty text)."""
+    posts, ids = [], set()
+    emoji_only = rng.randrange(n_posts)
+    for i in range(n_posts):
+        c, t, s = rng.choice(_CNBC_SUBJECTS)
+        title = "\U0001F3A2" if i == emoji_only else rng.choice(_REDDIT_TITLES).format(
+            c=c, t=t, s=s, d=rng.randint(1, 28), p=rng.randint(2, 60)
+        )
+        pid = ""
+        while not pid or pid in ids:
+            pid = "".join(rng.choice("0123456789abcdefghijklmnopqrstuvwxyz") for _ in range(7))
+        ids.add(pid)
+        slug = "_".join("".join(ch for ch in w if ch.isalnum()) for w in title.lower().split())
+        posted = datetime(2025, 4, 8) + timedelta(seconds=rng.randrange(14 * 24 * 3600))
+        # the raw dump's ISO-8601 form, or PRAW's formatted one (py:120)
+        stamp = posted.strftime(
+            "%Y-%m-%dT%H:%M:%S.000Z" if rng.random() < 0.5 else "%Y-%m-%d %H:%M:%S"
+        )
+        sub = rng.choice(_SUBREDDITS)
+        posts.append({
+            "Title": title,
+            "URL": f"https://www.reddit.com/r/{sub}/comments/{pid}/{slug.strip('_') or 'post'}/",
+            "Upvotes": int(50001 ** (rng.random() ** 3)) - 1,
+            "Comments_Count": int(5001 ** (rng.random() ** 3)) - 1,
+            "Post_Time": stamp,
+        })
+    return posts
+
+
+def gen_reference_fixtures(out: str, seed: int = 42) -> list[str]:
+    """Write the four FIXTURES.md §B1-B3 files into ``out``: the SEC CSV
+    (2,613 records), the two CNBC JSON-lines files (20 + 19 records, one
+    article in both) and the Reddit JSON-lines dump (500 posts). Returns
+    the written paths."""
+    rng = random.Random(seed)
+    os.makedirs(out, exist_ok=True)
+    arts = _cnbc_articles(rng, 38)
+    second = arts[20:]
+    second.insert(rng.randrange(len(second) + 1), arts[rng.randrange(20)])
+    files = {
+        "SEC_filings.csv": [_csv_line(_SEC_HEADER)]
+        + [_csv_line(r) for r in _sec_rows(rng, 2613)],
+        "CNBC_financial_news_1.json": [json.dumps(a, ensure_ascii=False) for a in arts[:20]],
+        "CNBC_financial_articles_2.json": [json.dumps(a, ensure_ascii=False) for a in second],
+        "reddit_posts.json": [
+            json.dumps(p, ensure_ascii=False) for p in _reddit_posts(rng, 500)
+        ],
+    }
+    paths = []
+    for name, lines in files.items():
+        path = os.path.join(out, name)
+        with open(path, "w", encoding="utf-8", newline="") as fh:
+            fh.write("\n".join(lines) + "\n")
+        paths.append(path)
+    return paths
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", type=float, required=True)
-    ap.add_argument("--out", required=True)
+    ap.add_argument("--sf", type=float)
+    ap.add_argument("--out")
+    ap.add_argument(
+        "--refdata",
+        metavar="DIR",
+        default=None,
+        help="write the FIXTURES.md §B1-B3 reference-shaped files (seed 42, "
+        "no Spark) into DIR instead of the parquet tables",
+    )
     ap.add_argument(
         "--skew-zipf",
         type=float,
@@ -367,6 +648,12 @@ def main():
         help="comma-separated subset of tables to write (default: all)",
     )
     args = ap.parse_args()
+    if args.refdata is not None:
+        for path in gen_reference_fixtures(args.refdata):
+            print(path)
+        return
+    if args.sf is None or args.out is None:
+        ap.error("--sf and --out are required (or give --refdata DIR)")
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("gen_testdata")
