@@ -20,6 +20,14 @@ relative to this process:
   ``sys.path`` at task-deserialization time, so this works even when the
   JVM (and its daemon environment) pre-dates this process.
 
+The first belt is also what lets ``session.get_spark`` run the daemon
+itself from this package (``spark.python.daemon.module=
+big_data_project_spark.worker_daemon``): the daemon is started with
+``python -m`` before any task ships the zip, so it can import the module
+only from ``PYTHONPATH``. ``get_spark`` therefore sets that conf only for a
+``local[N]`` master it picked and a JVM it launched after this export; a
+pre-started JVM or a cluster master keeps PySpark's stock daemon.
+
 Reference parity stakes: these carry the HTTP/Reddit connectors and the
 JSON sink (ai_powered_financial_analysis.py:10-31, 99-122, 432-438).
 """

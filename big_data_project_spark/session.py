@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark import SparkConf
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 from big_data_project_spark import bootstrap
@@ -31,6 +31,17 @@ def get_spark(
     pytest (small), bench (local[$SPARK_GRAFT_CPUS]) and a real cluster
     (master set externally via spark-submit — builder settings here are
     all master-agnostic).
+
+    Python worker daemon: when this call picks the ``local[N]`` master
+    itself AND launches the JVM (``SparkContext._gateway is None``), it sets
+    ``spark.python.daemon.module=big_data_project_spark.worker_daemon``,
+    which stops every Python task from re-reading unchanged zip archives
+    (see ``worker_daemon``). Only there is the repo
+    root sure to be on the daemon's ``PYTHONPATH``: ``export_pythonpath``
+    below reaches a JVM launched after it, and local workers run on this
+    host. A JVM started earlier, or a cluster master, keeps the stock
+    daemon, since its ``python -m`` import of the module could fail and
+    take every Python task with it. There is no switch for it.
     """
     # cwd-independence: forward the repo root to python worker daemons so
     # cloudpickled Data-Source/UDTF classes re-import cleanly (bootstrap.py).
@@ -60,6 +71,10 @@ def get_spark(
         or SparkConf().contains("spark.master")
     ):
         builder = builder.master(f"local[{cpus}]")
+        if SparkContext._gateway is None:
+            builder = builder.config(
+                "spark.python.daemon.module", "big_data_project_spark.worker_daemon"
+            )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -486,6 +486,34 @@ def test_removed_knobs_stay_removed(spark):
     }
     assert keys == {"lineageCut", "checkpointDir", "ccLocalThreshold"}
 
+    # the worker daemon has no switch: session.py alone sets its conf, and
+    # the package reads no environment variable beyond the session factory's
+    repo = pkg.parent
+    sources = [
+        p for d in ("big_data_project_spark", "tools", "examples")
+        for p in (repo / d).rglob("*.py")
+    ] + list(repo.glob("*.py"))
+    daemon_conf = re.compile(r"""["']spark\.python\.daemon\.module["']""")
+    assert {
+        p.relative_to(repo).as_posix()
+        for p in sources
+        if daemon_conf.search(p.read_text())
+    } == {"big_data_project_spark/session.py"}
+    env_keys = {
+        m
+        for p in pkg.rglob("*.py")
+        for m in re.findall(
+            r"""os\.(?:environ(?:\.get)?|getenv)\s*[\[(]\s*["'](\w+)["']""",
+            p.read_text(),
+        )
+    }
+    assert env_keys == {
+        "MASTER", "SPARK_MASTER", "PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS",
+        "PYTHONPATH", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_DRIVER_MEM",
+    }
+    assert "environ" not in (pkg / "worker_daemon.py").read_text()
+
     assert lineage._MODES == ("local", "reliable")
     try:
         spark.conf.set(lineage.CONF_KEY, "persist")
