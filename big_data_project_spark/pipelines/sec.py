@@ -52,6 +52,18 @@ RAW_SCHEMA = T.StructType(
 #: money-like columns that carry thousands separators in the raw feed.
 MONEY_COLUMNS = ("Market Value", "Weight (%)", "Notional Value", "Quantity", "Price")
 
+#: dedup order within one (Ticker, Name): lowest Market Value, Quantity,
+#: Price, then every other column, so the kept row never depends on the
+#: engine. The columns ``extract_metadata`` keeps come before the ones it
+#: drops: rows that tie on all kept columns give the same output row, which
+#: the ``pl_sec_real_data`` oracle's ORDER BY (the same columns, NULLS
+#: FIRST like Spark's ascending sort) relies on.
+DEDUP_ORDER = (
+    "Market Value", "Quantity", "Price", "Sector", "Weight (%)", "Location",
+    "Exchange", "Currency", "Asset Class", "Notional Value", "FX Rate",
+    "Market Currency", "Accrual Date",
+)
+
 
 def ingest(spark: SparkSession, path: str) -> DataFrame:
     """S1 (py:203-214): CSV scan with the reference's quoting, plus correct
@@ -69,9 +81,7 @@ def clean(df: DataFrame) -> DataFrame:
     df = df.withColumn("Sector", F.coalesce(F.col("Sector"), F.lit("unknown")))
     for c in MONEY_COLUMNS:
         df = df.withColumn(c, cleaning.parse_money(c, default=0.0))
-    return cleaning.dedup_deterministic(
-        df, ["Ticker", "Name"], ["Market Value", "Quantity", "Price"]
-    )
+    return cleaning.dedup_deterministic(df, ["Ticker", "Name"], list(DEDUP_ORDER))
 
 
 #: py:269-280 projection (reference renames these 10 columns).

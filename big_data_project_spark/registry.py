@@ -2886,6 +2886,8 @@ def _ref_sql(sql: str) -> str:
     # Full hash-matched oracle over the SAME file DuckDB reads directly.
     # Two-arg trim(x, ' ') mirrors Spark's ASCII-space-only F.trim (DuckDB's
     # one-arg trim strips unicode whitespace — the feed has a U+00A0 ticker).
+    # The dedup ORDER BY is the kept columns of sec.DEDUP_ORDER, NULLS FIRST
+    # as in Spark's ascending sort (DuckDB's default is NULLS LAST).
     oracle=_ref_sql(r"""
     WITH raw AS (
       SELECT * FROM read_csv('$REF_DIR/SEC_filings.csv',
@@ -2914,7 +2916,14 @@ def _ref_sql(sql: str) -> str:
     ),
     dedup AS (
       SELECT *, row_number() OVER (PARTITION BY ticker, company_name
-                                   ORDER BY market_value, quantity, price) AS rn
+                                   ORDER BY market_value NULLS FIRST,
+                                            quantity NULLS FIRST,
+                                            price NULLS FIRST,
+                                            sector NULLS FIRST,
+                                            weight_pct NULLS FIRST,
+                                            location NULLS FIRST,
+                                            exchange NULLS FIRST,
+                                            currency NULLS FIRST) AS rn
       FROM cleaned
     )
     SELECT ticker, company_name, sector, market_value, weight_pct, quantity,

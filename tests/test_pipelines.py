@@ -80,6 +80,47 @@ def test_sec_money_parse_pre_dedup(spark, sec_csv):
     assert got == [559365151.11, 0.0, 0.02]
 
 
+def _sec_row(ticker, sector, location):
+    return (
+        f'"{ticker}","TIED CO","{sector}","Equity","10.00","1.00","10.00",'
+        f'"2","5.00",{location},"NYSE","USD","1","USD","-"'
+    )
+
+
+def test_sec_dedup_breaks_full_ties_like_the_oracle(spark, tmp_path):
+    """Rows of one (Ticker, Name) that tie on Market Value, Quantity and
+    Price keep the same row in Spark and in the pl_sec_real_data oracle,
+    whatever their file order: the lowest Sector, then (on a Sector tie)
+    the NULL Location, as Spark's ascending sort puts NULL first."""
+    import duckdb
+    import pandas as pd
+
+    from big_data_project_spark import refdata, registry
+    from tests.conftest import canonical
+
+    rows = [
+        _sec_row("AAA", "tech", '"US"'), _sec_row("AAA", "energy", '"US"'),
+        _sec_row("BBB", "energy", '"US"'), _sec_row("BBB", "tech", '"US"'),
+        _sec_row("CCC", "tech", '"US"'), _sec_row("CCC", "tech", ""),
+    ]
+    csv = tmp_path / "SEC_filings.csv"
+    csv.write_text(SEC_HEADER + "\n" + "\n".join(rows) + "\n")
+
+    got = sec.extract_metadata(sec.clean(sec.ingest(spark, str(csv)))).toPandas()
+    kept = {
+        r.ticker: (r.sector, r.location) for r in got.itertuples(index=False)
+    }
+    assert kept == {
+        "aaa": ("energy", "US"), "bbb": ("energy", "US"), "ccc": ("tech", None),
+    }
+
+    ref_csv = f"{registry._REF_DIR}/{refdata.SEC_CSV}"
+    oracle = registry.REGISTRY["pl_sec_real_data"].oracle
+    assert ref_csv in oracle
+    want = duckdb.connect().execute(oracle.replace(ref_csv, str(csv))).df()
+    pd.testing.assert_frame_equal(canonical(got), canonical(want), check_dtype=False)
+
+
 CNBC_1 = [
     {"url": "https://cnbc.com/a1", "title": "Apple <b>soars</b>!",
      "date": "2025-04-15 00:00:00", "content": "Apple stock gains 5% today."},
