@@ -216,7 +216,9 @@ def recover_interrupted_swap(spark: SparkSession, path: str) -> bool:
     return False
 
 
-def atomic_overwrite(df: DataFrame, path: str) -> None:
+def atomic_overwrite(
+    df: DataFrame, path: str, *, commit_if: Callable[[], bool] | None = None
+) -> None:
     """Stage-and-swap rewrite of a path the plan may be reading from.
 
     The new data is fully written to ``path__stage`` (reading the original
@@ -231,7 +233,11 @@ def atomic_overwrite(df: DataFrame, path: str) -> None:
     False rather than raising — every return value is checked, and a failed
     swap-in rolls the original back so the live path is never left missing.
     Directory rename is atomic on HDFS/local posix; on object stores (S3A)
-    it is copy+delete — pair with a manifest committer there."""
+    it is copy+delete — pair with a manifest committer there.
+
+    ``commit_if`` is evaluated after the stage write, as in
+    :func:`write_snapshot`: False deletes the stage and leaves ``path``
+    untouched."""
     spark = df.sparkSession
     fs, hpath, jvm = _fs(spark, path)
     stage = jvm.org.apache.hadoop.fs.Path(path + "__stage")
@@ -247,6 +253,9 @@ def atomic_overwrite(df: DataFrame, path: str) -> None:
         elif not fs.rename(old, hpath):
             raise IOError(f"recovery rename failed: {path}__old -> {path}")
     df.write.mode("overwrite").parquet(path + "__stage")
+    if commit_if is not None and not commit_if():
+        fs.delete(stage, True)
+        return
     existed = fs.exists(hpath)
     if existed and not fs.rename(hpath, old):
         raise IOError(f"rename failed: {path} -> {path}__old")

@@ -17,6 +17,29 @@ from pyspark.sql import SparkSession
 
 from big_data_project_spark import bootstrap
 
+#: the fork-free Hadoop local filesystem (``jvm/ForkFreeLocalFileSystem.java``,
+#: built by ``tools/build_local_fs_jar.py``)
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "fork-free-localfs.jar"
+)
+_LOCAL_FS = "bdps.hadoop.ForkFreeLocalFileSystem"
+
+
+def _with_launched_here_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus the confs that hold only for a ``local[N]`` JVM
+    this process launches: the worker daemon module (importable from the
+    ``PYTHONPATH`` that ``bootstrap.export_pythonpath`` set) and the
+    fork-free local filesystem, whose jar goes on the driver classpath
+    ahead of the caller's entries. Any other key the caller gives wins."""
+    classpath = [LOCAL_FS_JAR, extra_conf.get("spark.driver.extraClassPath")]
+    return {
+        "spark.python.daemon.module": "big_data_project_spark.worker_daemon",
+        "spark.hadoop.fs.file.impl": _LOCAL_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCAL_FS + "$Fs",
+        **extra_conf,
+        "spark.driver.extraClassPath": os.pathsep.join(filter(None, classpath)),
+    }
+
 
 def get_spark(
     app_name: str = "big_data_project_spark",
@@ -42,6 +65,18 @@ def get_spark(
     host. A JVM started earlier, or a cluster master, keeps the stock
     daemon, since its ``python -m`` import of the module could fail and
     take every Python task with it. There is no switch for it.
+
+    Local filesystem: in the same branch it puts ``jvm/fork-free-localfs.jar``
+    first on ``spark.driver.extraClassPath`` (joined with any value in
+    ``extra_conf``) and sets ``fs.file.impl`` and
+    ``fs.AbstractFileSystem.file.impl`` to ``ForkFreeLocalFileSystem`` and
+    its ``Fs``. Without libhadoop, Hadoop's ``RawLocalFileSystem`` forks
+    ``chmod`` for every directory and file it writes and ``readlink`` for
+    every ``FileContext`` rename (about 51 commands per streaming-sink
+    trigger); the shim runs ``setPermission`` and ``getFileLinkStatus`` in
+    the JVM through ``java.nio`` and keeps the ``.crc`` checksums. A
+    classpath entry takes effect only when the JVM starts, so a JVM started
+    earlier, or a cluster master, keeps the stock filesystem.
     """
     # cwd-independence: forward the repo root to python worker daemons so
     # cloudpickled Data-Source/UDTF classes re-import cleanly (bootstrap.py).
@@ -53,6 +88,7 @@ def get_spark(
     )
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
+    extra_conf = extra_conf or {}
     builder = SparkSession.builder
     # Respect an externally-set master: only default to local[N] when none is
     # configured, so the same factory attaches to a real cluster unchanged.
@@ -72,9 +108,7 @@ def get_spark(
     ):
         builder = builder.master(f"local[{cpus}]")
         if SparkContext._gateway is None:
-            builder = builder.config(
-                "spark.python.daemon.module", "big_data_project_spark.worker_daemon"
-            )
+            extra_conf = _with_launched_here_conf(extra_conf)
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -87,7 +121,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

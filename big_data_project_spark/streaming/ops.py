@@ -254,7 +254,12 @@ def upsert_sink(df: DataFrame, target_path: str, checkpoint: str, key: str):
     micro-batch (and be retried from the checkpoint), never be misread as
     'target missing' and silently overwrite history with one batch. The
     rewrite itself is stage-and-swap (maintenance.atomic_overwrite), so an
-    executor loss mid-write cannot destroy the previous target."""
+    executor loss mid-write cannot destroy the previous target. An empty
+    batch leaves the target alone: an ``Observation`` row count rides the
+    stage write, and a zero count drops the stage instead of swapping it
+    in."""
+    from pyspark.sql import Observation
+
     from big_data_project_spark.operators.maintenance import (
         atomic_overwrite,
         merge_upsert,
@@ -269,11 +274,13 @@ def upsert_sink(df: DataFrame, target_path: str, checkpoint: str, key: str):
         # existence check, or this batch would be misread as the first one
         # and the recovered history dropped.
         recover_interrupted_swap(spark, target_path)
+        obs = Observation()
+        batch = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
         if path_exists(spark, target_path):
-            merged = merge_upsert(spark.read.parquet(target_path), batch_df, key)
+            merged = merge_upsert(spark.read.parquet(target_path), batch, key)
         else:
-            merged = batch_df
-        atomic_overwrite(merged, target_path)
+            merged = batch
+        atomic_overwrite(merged, target_path, commit_if=lambda: obs.get["n"] > 0)
 
     return (
         df.writeStream.outputMode("update")

@@ -486,19 +486,25 @@ def test_removed_knobs_stay_removed(spark):
     }
     assert keys == {"lineageCut", "checkpointDir", "ccLocalThreshold"}
 
-    # the worker daemon has no switch: session.py alone sets its conf, and
-    # the package reads no environment variable beyond the session factory's
+    # the worker daemon and the fork-free local filesystem have no switch:
+    # session.py alone sets their confs, and the package reads no
+    # environment variable beyond the session factory's
     repo = pkg.parent
     sources = [
         p for d in ("big_data_project_spark", "tools", "examples")
         for p in (repo / d).rglob("*.py")
     ] + list(repo.glob("*.py"))
-    daemon_conf = re.compile(r"""["']spark\.python\.daemon\.module["']""")
-    assert {
-        p.relative_to(repo).as_posix()
-        for p in sources
-        if daemon_conf.search(p.read_text())
-    } == {"big_data_project_spark/session.py"}
+    for literal in (
+        r"spark\.python\.daemon\.module",
+        r"spark\.hadoop\.fs\.file\.impl",
+        r"spark\.hadoop\.fs\.AbstractFileSystem\.file\.impl",
+    ):
+        conf = re.compile(rf"""["']{literal}["']""")
+        assert {
+            p.relative_to(repo).as_posix()
+            for p in sources
+            if conf.search(p.read_text())
+        } == {"big_data_project_spark/session.py"}, literal
     env_keys = {
         m
         for p in pkg.rglob("*.py")

@@ -241,6 +241,41 @@ def test_foreachbatch_upsert_sink(spark, tmp_path):
     assert final == {1: 9.0, 2: 2.0, 3: 3.0}, final
 
 
+def test_upsert_sink_empty_file_leaves_the_target_alone(spark, tmp_path):
+    """A 0-row file is a batch of its own; the sink must not rewrite the
+    target for it (the row count rides the stage write, and an empty stage
+    is dropped instead of swapped in)."""
+    src_dir = str(tmp_path / "empty_src")
+    target = tmp_path / "empty_target"
+
+    def files():
+        return {
+            p.relative_to(target).as_posix(): p.stat().st_mtime_ns
+            for p in target.rglob("*")
+        }
+
+    b1 = _event_batch(spark, [(1, "2024-01-01 10:00:00", 1, "click", 1.0, "{}")])
+    _drop_file(b1, src_dir, "b1.parquet")
+    q = st.upsert_sink(
+        st.read_event_stream(spark, src_dir), str(target), str(tmp_path / "ckpt"),
+        "event_id",
+    )
+    try:
+        q.processAllAvailable()
+        before = files()
+        _drop_file(b1.limit(0), src_dir, "empty.parquet")
+        q.processAllAvailable()
+        assert q.lastProgress["numInputRows"] == 0
+        assert files() == before
+        b2 = _event_batch(spark, [(2, "2024-01-01 10:01:00", 2, "click", 2.0, "{}")])
+        _drop_file(b2, src_dir, "b2.parquet")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(r.event_id for r in spark.read.parquet(str(target)).collect()) == [1, 2]
+    assert not os.path.exists(f"{target}__stage")
+
+
 def _scd2_feed(spark, rows):
     return spark.createDataFrame(
         rows, "cust long, seg string, u_ts string"

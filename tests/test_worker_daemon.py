@@ -152,6 +152,11 @@ plus_one = F.udf(lambda x: x + 1, T.LongType())
 def check(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module", None) is None
+    # and the stock local filesystem: the shim's jar is not on its classpath
+    fs = spark._jvm.org.apache.hadoop.fs.FileSystem.get(
+        spark._jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    assert fs.getRaw().getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    assert conf.get("spark.hadoop.fs.file.impl", None) is None
     assert [r[0] for r in spark.range(3).select(plus_one("id")).collect()] == [1, 2, 3]
 
 
@@ -172,7 +177,8 @@ def test_prestarted_jvm_keeps_the_stock_daemon(tmp_path):
     """A JVM launched before ``get_spark`` has no repo root on its daemon's
     PYTHONPATH, so the daemon module must stay unset there, also when
     ``get_spark`` picks the local master, or every Python task would fail
-    at the daemon's ``-m`` import."""
+    at the daemon's ``-m`` import. The same holds for the fork-free local
+    filesystem, whose jar is not on that JVM's classpath."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         [sys.executable, "-c", _PRESTARTED_JVM.format(repo=REPO)],
