@@ -558,16 +558,21 @@ def _jpeg_codec():
     import math
     import struct
 
+    import numpy as np
+
     # 8x8 DCT-II basis: M[u][x] = c(u)/2 * cos((2x+1)*u*pi/16), c(0)=1/sqrt2.
     # FDCT is S = M s Mt, IDCT is s = Mt S M (T.81 A.3.3).
-    M = [
+    M = np.array(
         [
-            ((math.sqrt(0.5) if u == 0 else 1.0) / 2.0)
-            * math.cos((2 * x + 1) * u * math.pi / 16.0)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ]
+            [
+                ((math.sqrt(0.5) if u == 0 else 1.0) / 2.0)
+                * math.cos((2 * x + 1) * u * math.pi / 16.0)
+                for x in range(8)
+            ]
+            for u in range(8)
+        ],
+        dtype="float64",
+    )
 
     # zigzag scan position -> natural (row-major) index, generated by
     # walking anti-diagonals (T.81 Figure A.6) rather than transcribed
@@ -663,53 +668,15 @@ def _jpeg_codec():
     AC_PROG_BITS[7] = len(AC_PROG_VALS)  # every symbol at code length 8
     AC_PROG_ENC = build_enc_codes(AC_PROG_BITS, AC_PROG_VALS)
 
-    # numpy fast path for the two dense transforms (the codec itself — the
-    # marker walk, huffman coding, stuffing — stays hand-rolled stdlib).
-    # Resolved lazily per process so the by-value-pickled closure works on
-    # workers either way; pure-Python loops are the fallback.
-    _np_cell: list = []
-
-    def _np():
-        if not _np_cell:
-            try:
-                import numpy
-
-                _np_cell.append(
-                    (numpy, numpy.array(M, dtype="float64"))
-                )
-            except Exception:
-                _np_cell.append(None)
-        return _np_cell[0]
-
+    # the two dense transforms run in numpy; the codec itself (the marker
+    # walk, huffman coding, stuffing) stays hand-rolled stdlib
     def fdct(blk):  # blk: 64 level-shifted ints, row-major [y*8+x]
-        hit = _np()
-        if hit is not None:
-            np, Mnp = hit
-            s = np.asarray(blk, dtype="float64").reshape(8, 8)
-            return (Mnp @ s @ Mnp.T).tolist()
-        tmp = [
-            [sum(M[u][y] * blk[y * 8 + x] for y in range(8)) for x in range(8)]
-            for u in range(8)
-        ]
         # S[vfreq][hfreq]: natural index vfreq*8+hfreq matches ZZ's r*8+c
-        return [
-            [sum(tmp[u][x] * M[v][x] for x in range(8)) for v in range(8)]
-            for u in range(8)
-        ]
+        s = np.asarray(blk, dtype="float64").reshape(8, 8)
+        return (M @ s @ M.T).tolist()
 
     def idct(C):  # C: 8x8 natural [vfreq][hfreq], dequantized
-        hit = _np()
-        if hit is not None:
-            np, Mnp = hit
-            return (Mnp.T @ np.asarray(C, dtype="float64") @ Mnp).tolist()
-        tmp = [
-            [sum(M[v][y] * C[v][u] for v in range(8)) for u in range(8)]
-            for y in range(8)
-        ]
-        return [
-            [sum(tmp[y][u] * M[u][x] for u in range(8)) for x in range(8)]
-            for y in range(8)
-        ]
+        return (M.T @ np.asarray(C, dtype="float64") @ M).tolist()
 
     # ---- helpers shared by BOTH encoders and both decode paths ----------
     # (one copy each of the colorspace constants, quantization rounding,

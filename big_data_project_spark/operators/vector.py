@@ -1413,7 +1413,6 @@ def mmr_rerank(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     rel_col: str = "score",
-    mode: str = "engine",
 ) -> DataFrame:
     """Maximal-marginal-relevance rerank (Carbonell & Goldstein 1998) of a
     retrieval head: greedily pick argmax λ·relevance − (1−λ)·max-sim-to-
@@ -1428,21 +1427,9 @@ def mmr_rerank(
     cache it pinned (no per-call cache-manager leak), and returns the
     rows as a fresh DataFrame. Every arithmetic step (cosine fold,
     λ-combination, tie-break by id) is engine-exact, so MMR's SELECTIONS
-    AND SCORES are value-hashable.
-
-    ``mode='engine'`` (default) runs the greedy loop as Spark stages —
-    the oracle-mirrorable path. ``mode='serving'`` collects the bounded
-    head ONCE and folds driver-side in plain Python that mirrors the SQL
-    float math operation-for-operation (left-to-right dot fold, same
-    λ-combination order), so the two modes are BIT-IDENTICAL (pinned by
-    test) while serving skips k plan/cache rounds per query — the right
-    path for per-query latency (VERDICT r4 residual nit)."""
-    if mode not in ("engine", "serving"):
-        raise ValueError("mode must be 'engine' or 'serving'")
+    AND SCORES are value-hashable."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if mode == "serving":
-        return _mmr_serving(candidates, k, lam, id_col, emb_col, rel_col)
     # persist the head and its pair sims: both are ≤N(+N²) ROWS by
     # construction, and every unrolled greedy stage reuses them — without
     # the cache the lazy tree recomputes the retrieval scan per stage
@@ -1455,7 +1442,7 @@ def mmr_rerank(
     # zero-norm guard: similarity to/from a zero vector is NULL by
     # definition here (sorts last), identically under ANSI on (where a bare
     # division would throw DIVIDE_BY_ZERO) and off (where it would be NULL
-    # anyway) — and identically to mode='serving'
+    # anyway)
     _den = norm(F.col("_ea")) * norm(F.col("_eb"))
     sims = a.join(b, F.col("_ia") != F.col("_ib")).select(
         "_ia",
@@ -1504,90 +1491,6 @@ def mmr_rerank(
     for c in caches:
         c.unpersist()
     return cand.sparkSession.createDataFrame(rows, schema)
-
-
-def _mmr_serving(candidates, k, lam, id_col, emb_col, rel_col):
-    """Driver-side MMR fold over the collected ≤N-row head. The float math
-    mirrors the engine path's SQL operation-for-operation — ``dot`` is a
-    left-to-right ``acc + x*y`` fold from 0.0, cosine divides by the
-    product of sqrts, the combination is ``λ·rel − (1−λ)·maxsim`` — so the
-    scores are bit-identical to ``mode='engine'`` (IEEE doubles round the
-    same on both sides; pinned by test_mmr_serving_bitwise_equals_engine).
-    One job to collect the head, zero shuffles, zero cache churn."""
-    import math
-
-    from pyspark.sql import types as T
-
-    head = candidates.select(
-        F.col(id_col), F.col(emb_col), F.col(rel_col)
-    ).collect()
-
-    def dot_py(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x * y)
-        return acc
-
-    def cos_py(a, b):
-        # Spark returns NULL for x/0 in non-ANSI mode (even for doubles):
-        # mirror that so zero-norm embeddings behave identically to the
-        # engine path instead of raising ZeroDivisionError
-        den = math.sqrt(dot_py(a, a)) * math.sqrt(dot_py(b, b))
-        return dot_py(a, b) / den if den != 0.0 else None
-
-    items = [(r[id_col], list(r[emb_col]), r[rel_col]) for r in head]
-    picked = []  # (id, rank, mmr_score)
-    chosen_embs = []
-
-    def order_key(score, vid):
-        # engine: ORDER BY score DESC NULLS LAST, id ASC — as a max() key
-        return (score is not None, score if score is not None else 0.0, _NegId(vid))
-
-    while items and len(picked) < k:
-        if not picked:
-            best = max(items, key=lambda it: order_key(it[2], it[0]))
-            score = best[2]
-        else:
-            scored = []
-            for vid, emb, rel in items:
-                sims = [s for s in (cos_py(emb, c) for c in chosen_embs)
-                        if s is not None]
-                ms = max(sims) if sims else None  # F.max skips NULLs
-                sc = lam * rel - (1.0 - lam) * ms if ms is not None else None
-                scored.append((sc, vid, emb, rel))
-            sc, vid, emb, rel = max(scored, key=lambda t: order_key(t[0], t[1]))
-            best, score = (vid, emb, rel), sc
-        picked.append(
-            (best[0], len(picked) + 1, float(score) if score is not None else None)
-        )
-        chosen_embs.append(best[1])
-        items = [it for it in items if it[0] != best[0]]
-
-    id_field = next(f for f in candidates.select(id_col).schema.fields)
-    schema = T.StructType(
-        [
-            id_field,
-            T.StructField("rank", T.LongType(), False),
-            T.StructField("mmr_score", T.DoubleType(), True),
-        ]
-    )
-    return candidates.sparkSession.createDataFrame(picked, schema)
-
-
-class _NegId:
-    """max()-key helper: prefer the SMALLEST id on score ties (mirrors the
-    engine path's ascending-id tie-break inside a single max pass)."""
-
-    __slots__ = ("v",)
-
-    def __init__(self, v):
-        self.v = v
-
-    def __lt__(self, other):  # inverted: larger id -> "less preferred"
-        return self.v > other.v
-
-    def __eq__(self, other):
-        return self.v == other.v
 
 
 def md5_coarse_centroids(

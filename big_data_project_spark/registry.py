@@ -5047,7 +5047,8 @@ def e10_mmr_rerank(spark, sf_dir):
     head — the standard pass between retrieval and prompt assembly (near-
     duplicate passages waste the context window). Top-20 IP candidates
     for query vec 5, then 5 greedy steps of λ·rel − (1−λ)·max-sim-to-
-    selected, unrolled lazily into the plan (no collect). Every step —
+    selected, run as cached Spark stages; ``mmr_rerank`` collects the
+    ≤5 selected rows and returns them as a fresh frame. Every step —
     cosine fold, λ-combination (dyadic 0.75 so both engines' literals are
     the same double), argmax tie-break — is engine-exact, so MMR's
     selections AND scores hash. Diversity-vs-topk behavior is gated in
@@ -6572,10 +6573,6 @@ def mm_jpeg_decode(spark, sf_dir):
                 )
             yield _pd.DataFrame(out, columns=["doc_id", "payload"])
 
-    # the codec is CPU-bound Python: spread the docs across cores before the
-    # map stages (the small-SF parquet arrives as one input split; at 100 TB
-    # the file index would already provide the splits)
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     payloads = docs.mapInPandas(build, out_schema)
     feats = multimodal.decode_features(payloads, dim=32, decode="strict")
     return _jpeg_mosaic_project(feats)
@@ -6650,7 +6647,6 @@ def mm_jpeg_progressive(spark, sf_dir):
                 )
             yield _pd.DataFrame(out, columns=["doc_id", "payload"])
 
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     payloads = docs.mapInPandas(build, out_schema)
     feats = multimodal.decode_features(payloads, dim=32, decode="strict")
     return _jpeg_mosaic_project(feats)

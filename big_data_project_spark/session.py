@@ -11,6 +11,7 @@ cluster rather than the 200 default.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
@@ -27,12 +28,14 @@ _LOCAL_FS = "bdps.hadoop.ForkFreeLocalFileSystem"
 
 def _with_launched_here_conf(extra_conf: dict[str, str]) -> dict[str, str]:
     """``extra_conf`` plus the confs that hold only for a ``local[N]`` JVM
-    this process launches: the worker daemon module (importable from the
-    ``PYTHONPATH`` that ``bootstrap.export_pythonpath`` set) and the
-    fork-free local filesystem, whose jar goes on the driver classpath
-    ahead of the caller's entries. Any other key the caller gives wins."""
+    this process launches: this interpreter as the workers' Python, the
+    worker daemon module (importable from the ``PYTHONPATH`` that
+    ``bootstrap.export_pythonpath`` set) and the fork-free local
+    filesystem, whose jar goes on the driver classpath ahead of the
+    caller's entries. Any other key the caller gives wins."""
     classpath = [LOCAL_FS_JAR, extra_conf.get("spark.driver.extraClassPath")]
     return {
+        "spark.pyspark.python": sys.executable,
         "spark.python.daemon.module": "big_data_project_spark.worker_daemon",
         "spark.hadoop.fs.file.impl": _LOCAL_FS,
         "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCAL_FS + "$Fs",
@@ -66,6 +69,15 @@ def get_spark(
     daemon, since its ``python -m`` import of the module could fail and
     take every Python task with it. There is no switch for it.
 
+    Worker interpreter: in the same branch, Python workers run
+    ``sys.executable`` (``spark.pyspark.python``; a value in ``extra_conf``
+    wins) instead of the ``$PYSPARK_PYTHON`` (default ``python3``) that a
+    ``PATH`` lookup resolves, where a version-manager shim may sit: pyenv's
+    is a bash script that forks 13 ``bash`` and 5 ``readlink`` per worker
+    start. PySpark ships ``SparkContext.pythonExec`` with every Python
+    function and, in a session it launches, never reads the conf, so the
+    factory sets that attribute from it before any function is built.
+
     Local filesystem: in the same branch it puts ``jvm/fork-free-localfs.jar``
     first on ``spark.driver.extraClassPath`` (joined with any value in
     ``extra_conf``) and sets ``fs.file.impl`` and
@@ -89,6 +101,7 @@ def get_spark(
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
     extra_conf = extra_conf or {}
+    python_exec = None
     builder = SparkSession.builder
     # Respect an externally-set master: only default to local[N] when none is
     # configured, so the same factory attaches to a real cluster unchanged.
@@ -109,6 +122,7 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
         if SparkContext._gateway is None:
             extra_conf = _with_launched_here_conf(extra_conf)
+            python_exec = extra_conf["spark.pyspark.python"]
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -124,6 +138,8 @@ def get_spark(
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if python_exec is not None:
+        spark.sparkContext.pythonExec = python_exec
     spark.sparkContext.setLogLevel("WARN")
     # Belt 2 for sessions attached to an already-running JVM: ship the
     # package zip so workers can import it regardless of cwd/PYTHONPATH.

@@ -29,7 +29,6 @@ from big_data_project_spark.streaming.ops import (
     anomaly_stream,
     kmv_running_sketch,
     running_user_totals,
-    running_user_totals_tws,
     session_window_agg,
     sessionize_batch,
     sliding_window_agg,

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import posixpath
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -494,21 +495,16 @@ def scd2_sink_incremental(
     post-apply, so its closed delta is empty and nothing publishes. All
     directory listing/rename goes through the Hadoop FileSystem, so
     hdfs:///object-store targets work the same as local paths."""
-    import re
-    import uuid
-
     from big_data_project_spark.operators.maintenance import (
         atomic_overwrite,
         list_dir,
         path_exists,
         recover_interrupted_swap,
-        rename_path,
         scd2_apply,
     )
 
     open_path = posixpath.join(target_path, "open")
     closed_root = posixpath.join(target_path, "closed")
-    _num = re.compile(r"^(?:batch|base)-(\d{8})$")
 
     def do_apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -540,9 +536,8 @@ def scd2_sink_incremental(
         if not closed_delta.isEmpty():
             # next free index, also past any compaction base so the new
             # dir stays visible to the newest-base + batches-≥-K listing
-            names = list_dir(spark, closed_root)
-            ids = [int(m.group(1)) for d in names if (m := _num.match(d))]
-            nxt = (max(ids) + 1) if ids else 0
+            bases, batch_ids = _family_ids(list_dir(spark, closed_root))
+            nxt = max(bases + batch_ids, default=-1) + 1
             # Replay-skip (r9, subset case r10): if the NEWEST batch dir
             # is CONTAINED in this delta (row multiset), it is our own
             # earlier attempt — crash between publish and swap, retried
@@ -566,11 +561,6 @@ def scd2_sink_incremental(
             # the source; scd2_history's epoch-aware dedup stays as the
             # belt for pre-fix dirs and for the
             # compacted-away-mid-crash corner (see compact_scd2_closed).
-            batch_ids = [
-                int(m.group(1))
-                for d in names
-                if (m := re.match(r"^batch-(\d{8})$", d))
-            ]
             # Walk the TRAILING dirs newest-first, not just the newest
             # (ADVICE r9 follow-up): each repeated crash between a
             # remainder publish and the open swap leaves one more
@@ -595,7 +585,7 @@ def scd2_sink_incremental(
             # feed probe above warns on exactly the feed shape that
             # voids the contract, BEFORE this walk can
             # misread it — keep probe and walk in sync.
-            for bid in sorted(batch_ids, reverse=True):
+            for bid in reversed(batch_ids):
                 prev = spark.read.parquet(
                     posixpath.join(closed_root, f"batch-{bid:08d}")
                 )
@@ -615,14 +605,9 @@ def scd2_sink_incremental(
                         open_path,
                     )
                     return
-            tmp = posixpath.join(
-                closed_root, f".batch-{nxt:08d}.{uuid.uuid4().hex}.tmp"
-            )
-            closed_delta.withColumn(
-                "_scd2_epoch", F.lit(int(epoch_id))
-            ).write.mode("overwrite").parquet(tmp)
-            rename_path(
-                spark, tmp, posixpath.join(closed_root, f"batch-{nxt:08d}")
+            _publish_parquet(
+                closed_delta.withColumn("_scd2_epoch", F.lit(int(epoch_id))),
+                posixpath.join(closed_root, f"batch-{nxt:08d}"),
             )
         atomic_overwrite(hist.where(F.col("valid_to").isNull()), open_path)
 
@@ -1083,67 +1068,16 @@ def versioned_upsert_sink(df: DataFrame, target_path: str, checkpoint: str, key:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on the MODERN stateful API
-    (transformWithStateInPandas + StatefulProcessor, Spark 4) — the
-    successor surface to applyInPandasWithState, with named state slots
-    and timer support. Functionally the twin of running_user_totals;
-    tests pin the two equal across micro-batches, so the engine covers
-    both stateful surfaces without semantic drift. State per key is one
-    (count, total) tuple; output one row per key per micro-batch.
-
-    Environment note: the transformWithState Python⇄JVM state protocol is
-    protobuf-serialized; in containers without google.protobuf the query
-    fails at initialization (the equivalence test import-skips there) —
-    the applyInPandasWithState twin carries the verified behavior."""
-    import pandas as pd  # local: self-contained closure for the worker
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-
-    class Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Totals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def _publish_parquet(df: DataFrame, final: str) -> None:
-    """Atomic directory publish shared by the continuous-ingest sinks:
-    write to a hidden temp sibling, FS-rename into place. A dir that
+    """The one atomic directory publish of the streaming sinks (the
+    near-dedup / semantic / curation batch dirs, the SCD2 closed deltas
+    and every ``base-<K>`` compaction): write to a hidden
+    ``.<name>.<uuid>.tmp`` sibling, FS-rename into place. A dir that
     already exists SKIPS — content is a pure function of its inputs, so
     the existing dir is already correct: exactly-once at the directory
-    level, the same discipline as the tar/zip stream sinks. FS-routed
+    level, the same discipline as the tar/zip stream sinks. (SCD2 and
+    compaction always pick a fresh name, so for one writer the skip
+    cannot fire there.) FS-routed
     (Hadoop FileSystem), so non-local out_dirs publish the same way
     (ADVICE r8).
 
@@ -1190,48 +1124,6 @@ def _publish_parquet(df: DataFrame, final: str) -> None:
             delete_path(spark, nested)
     finally:
         delete_path(spark, tmp)
-
-
-def _prior_index_dirs(
-    spark: SparkSession,
-    index_root: str,
-    batch_id: int,
-    base_index_path: str | None = None,
-) -> list[str]:
-    """Compaction-aware accumulated-index listing shared by the
-    continuous-ingest sinks: the newest ``base-<K>`` snapshot covers
-    every batch dir < K (see :func:`_compact_batch_root`); batch dirs a
-    compactor has folded but not yet retired are read AGAIN harmlessly —
-    index rows are per-doc idempotent (duplicate rows produce duplicate
-    candidate pairs, which the delta operators distinct() away), so a
-    crash between base publish and cleanup never changes results. The
-    CURRENT batch id's own dir is excluded so a replayed batch never
-    dedups against its own previous attempt. FS-routed listing
-    (ADVICE r8)."""
-    import re
-
-    from big_data_project_spark.operators.maintenance import list_dir
-
-    prior = []
-    if base_index_path is not None:
-        prior.append(base_index_path)
-    names = list_dir(spark, index_root)
-    if not names:
-        return prior
-    base_pat = re.compile(r"^base-(\d{8})$")
-    pat = re.compile(r"^batch-(\d{8})$")
-    base_k = -1
-    for d in names:
-        m = base_pat.match(d)
-        if m:
-            base_k = max(base_k, int(m.group(1)))
-    if base_k >= 0:
-        prior.append(posixpath.join(index_root, f"base-{base_k:08d}"))
-    for d in sorted(names):
-        m = pat.match(d)
-        if m and base_k <= int(m.group(1)) < int(batch_id):
-            prior.append(posixpath.join(index_root, d))
-    return prior
 
 
 def near_dedup_stream(
@@ -1306,7 +1198,9 @@ def near_dedup_stream(
             spark, index_final
         ):
             return  # replay of a fully-published batch: nothing to redo
-        prior = _prior_index_dirs(spark, index_root, int(batch_id), base_index_path)
+        prior = _batch_family_sources(
+            spark, index_root, int(batch_id), base_index_path
+        )
         if prior:
             index_df = spark.read.parquet(*prior)
         else:
@@ -1470,7 +1364,9 @@ def semantic_dedup_stream(
                 cpath,
             )
         centroids = spark.read.parquet(cpath)
-        prior = _prior_index_dirs(spark, index_root, int(batch_id), base_index_path)
+        prior = _batch_family_sources(
+            spark, index_root, int(batch_id), base_index_path
+        )
         if prior:
             index_df = spark.read.parquet(*prior)
         else:
@@ -1511,8 +1407,9 @@ def _compact_batch_root(spark: SparkSession, root: str) -> int:
     (the ``index/`` and ``data/`` roots of a :func:`near_dedup_stream` /
     :func:`curate_stream` run): fold every ``batch-<id>`` dir with
     id ≥ the newest base into ONE ``base-<K>`` snapshot
-    (K = highest folded batch id + 1), published atomically
-    (write-temp + rename).
+    (K = highest folded batch id + 1), published atomically through
+    :func:`_publish_parquet` (K is above every existing base, so the
+    target name is always fresh).
 
     **Deferred (generation-graced) cleanup** — ADVICE r7: nothing the
     just-published base covers is deleted in the same run. Instead, each
@@ -1542,22 +1439,12 @@ def _compact_batch_root(spark: SparkSession, root: str) -> int:
     All listing/rename/delete goes through the Hadoop FileSystem, so
     hdfs:///object-store roots compact the same as local ones (ADVICE
     r8)."""
-    import re
-    import uuid
-
     from big_data_project_spark.operators.maintenance import (
         delete_path,
         list_dir,
-        rename_path,
     )
 
-    names = list_dir(spark, root)
-    if not names:
-        return 0
-    base_pat = re.compile(r"^base-(\d{8})$")
-    batch_pat = re.compile(r"^batch-(\d{8})$")
-    bases = sorted(int(m.group(1)) for d in names if (m := base_pat.match(d)))
-    batches = sorted(int(m.group(1)) for d in names if (m := batch_pat.match(d)))
+    bases, batches = _family_ids(list_dir(spark, root))
     prev_k = bases[-1] if bases else -1
     # deferred cleanup FIRST: retire everything the previous base (one
     # whole compaction generation old) already covers
@@ -1574,17 +1461,12 @@ def _compact_batch_root(spark: SparkSession, root: str) -> int:
         srcs.append(posixpath.join(root, f"base-{prev_k:08d}"))
     srcs += [posixpath.join(root, f"batch-{b:08d}") for b in fold]
     new_k = fold[-1] + 1
-    final = posixpath.join(root, f"base-{new_k:08d}")
-    tmp = posixpath.join(root, f".base-{new_k:08d}.{uuid.uuid4().hex}.tmp")
-    try:
-        # mergeSchema: closed-family dirs may span the pre-/post-epoch-tag
-        # schema (scd2 _scd2_epoch column added r9); data dirs are uniform
-        spark.read.option("mergeSchema", "true").parquet(*srcs).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        rename_path(spark, tmp, final)
-    finally:
-        delete_path(spark, tmp)
+    # mergeSchema: closed-family dirs may span the pre-/post-epoch-tag
+    # schema (scd2 _scd2_epoch column added r9); data dirs are uniform
+    _publish_parquet(
+        spark.read.option("mergeSchema", "true").parquet(*srcs),
+        posixpath.join(root, f"base-{new_k:08d}"),
+    )
     # the just-folded dirs and prev base stay on disk until the NEXT run
     # (grace generation) — crash anywhere leaves harmless overlap
     return new_k
@@ -1656,29 +1538,51 @@ def admitted_corpus(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(*srcs)
 
 
-def _batch_family_sources(spark: SparkSession, root: str) -> list[str]:
-    """The shared reader rule for a compacted ``batch-*`` directory
-    family: the newest ``base-<K>`` snapshot (if any) plus every
-    ``batch-<id>`` dir with id ≥ K — tolerant of every compactor crash
-    state (overlap dirs are covered by the base and skipped; never
-    double-read). Used by :func:`admitted_corpus` (data side) and
-    :func:`scd2_history` (closed-version side). Listing goes through the
-    Hadoop FileSystem so non-local targets work (ADVICE r8)."""
-    import re
+#: the names a ``batch-*`` directory family publishes; dot-prefixed temp
+#: dirs and anything else in the root are not part of the family
+_FAMILY_DIR = re.compile(r"^(base|batch)-(\d{8})$")
 
+
+def _family_ids(names: list[str]) -> tuple[list[int], list[int]]:
+    """Sorted ``base-<K>`` and ``batch-<id>`` ids among a family root's
+    child names (the one parser every family reader and writer uses)."""
+    ids: dict[str, list[int]] = {"base": [], "batch": []}
+    for d in names:
+        if m := _FAMILY_DIR.match(d):
+            ids[m.group(1)].append(int(m.group(2)))
+    return sorted(ids["base"]), sorted(ids["batch"])
+
+
+def _batch_family_sources(
+    spark: SparkSession,
+    root: str,
+    below: int | None = None,
+    base_path: str | None = None,
+) -> list[str]:
+    """The listing rule for a compacted ``batch-*`` directory family: the
+    newest ``base-<K>`` snapshot (if any) plus every ``batch-<id>`` dir
+    with id ≥ K. Tolerant of every compactor crash state: dirs a
+    compactor has folded but not yet retired are below K and skipped,
+    never double-read (see :func:`_compact_batch_root`).
+
+    Shared by :func:`admitted_corpus` (data side), :func:`scd2_history`
+    (closed versions) and the per-batch index load of
+    :func:`near_dedup_stream` / :func:`semantic_dedup_stream`. The
+    streams pass ``below`` = the current batch id, which keeps only
+    ``batch-<id>`` dirs with id < it, so a replayed batch never dedups
+    against its own previous attempt, and ``base_path``, their
+    pre-existing index snapshot, which goes first. Listing goes through
+    the Hadoop FileSystem so non-local targets work (ADVICE r8)."""
     from big_data_project_spark.operators.maintenance import list_dir
 
-    base_pat = re.compile(r"^base-(\d{8})$")
-    batch_pat = re.compile(r"^batch-(\d{8})$")
-    names = list_dir(spark, root)
-    bases = sorted(int(m.group(1)) for d in names if (m := base_pat.match(d)))
+    bases, batches = _family_ids(list_dir(spark, root))
     base_k = bases[-1] if bases else -1
-    srcs = []
-    if base_k >= 0:
+    srcs = [base_path] if base_path is not None else []
+    if bases:
         srcs.append(posixpath.join(root, f"base-{base_k:08d}"))
-    srcs += sorted(
-        posixpath.join(root, d)
-        for d in names
-        if (m := batch_pat.match(d)) and int(m.group(1)) >= base_k
-    )
+    srcs += [
+        posixpath.join(root, f"batch-{b:08d}")
+        for b in batches
+        if b >= base_k and (below is None or b < below)
+    ]
     return srcs

@@ -470,11 +470,12 @@ def test_removed_knobs_stay_removed(spark):
     the lineage-cut deployment pair and the connected-components local
     threshold, ``lineage_cut`` knows exactly two modes, and the deleted
     keyword switches are rejected at the call instead of silently
-    accepted."""
+    accepted; the deleted second implementations are gone."""
     import pathlib
     import re
 
-    from big_data_project_spark.operators import dedup, maintenance
+    from big_data_project_spark import streaming
+    from big_data_project_spark.operators import dedup, maintenance, vector
     from big_data_project_spark.plans import lineage
     from big_data_project_spark.streaming import ops
 
@@ -486,15 +487,17 @@ def test_removed_knobs_stay_removed(spark):
     }
     assert keys == {"lineageCut", "checkpointDir", "ccLocalThreshold"}
 
-    # the worker daemon and the fork-free local filesystem have no switch:
-    # session.py alone sets their confs, and the package reads no
-    # environment variable beyond the session factory's
+    # the worker interpreter, the worker daemon and the fork-free local
+    # filesystem have no switch: session.py alone sets their confs, and
+    # the package reads no environment variable beyond the session
+    # factory's
     repo = pkg.parent
     sources = [
         p for d in ("big_data_project_spark", "tools", "examples")
         for p in (repo / d).rglob("*.py")
     ] + list(repo.glob("*.py"))
     for literal in (
+        r"spark\.pyspark\.python",
         r"spark\.python\.daemon\.module",
         r"spark\.hadoop\.fs\.file\.impl",
         r"spark\.hadoop\.fs\.AbstractFileSystem\.file\.impl",
@@ -538,3 +541,9 @@ def test_removed_knobs_stay_removed(spark):
         maintenance.scd2_apply(
             None, None, "k", "ts", ["a"], broadcast_changed_keys=True
         )
+    with pytest.raises(TypeError, match="mode"):
+        vector.mmr_rerank(None, k=3, mode="serving")
+    # one stateful running-totals operator: the transformWithState twin
+    # (which needs google.protobuf) is gone from the package surface
+    assert not hasattr(streaming, "running_user_totals_tws")
+    assert not hasattr(ops, "running_user_totals_tws")

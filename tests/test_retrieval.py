@@ -94,47 +94,11 @@ def test_mmr_spreads_across_clusters(spark):
     assert 1 in picked  # first pick is still the top-relevance hit
 
 
-def test_mmr_serving_bitwise_equals_engine(spark):
-    """mode='serving' (driver-side fold, VERDICT r4 residual nit) must be
-    BIT-identical to mode='engine' — same picks, same ranks, and exact
-    float equality of mmr_score (the Python fold mirrors the SQL float
-    math operation-for-operation), on a head with near-ties and duplicate
-    directions."""
-    import math
-    import random
-
-    from big_data_project_spark.operators import vector
-
-    rng = random.Random(77)
-    rows = []
-    for i in range(20):
-        base = [math.sin(i * 0.17 + j) for j in range(8)]
-        if i % 3 == 0 and i:  # inject near-duplicates of earlier vectors
-            base = [v + 1e-4 for v in rows[i - 1][1]]
-        rows.append((i, base, round(rng.uniform(0.1, 1.0), 6)))
-    cand = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, score double"
-    )
-    for k, lam in [(5, 0.7), (3, 0.5), (8, 1.0), (1, 0.2)]:
-        eng = vector.mmr_rerank(cand, k=k, lam=lam).orderBy("rank").collect()
-        srv = (
-            vector.mmr_rerank(cand, k=k, lam=lam, mode="serving")
-            .orderBy("rank")
-            .collect()
-        )
-        assert [(r.vec_id, r.rank) for r in eng] == [
-            (r.vec_id, r.rank) for r in srv
-        ], (k, lam)
-        for a, b in zip(eng, srv):
-            assert a.mmr_score == b.mmr_score, (k, lam, a, b)  # EXACT
-
-
-def test_mmr_serving_matches_engine_on_zero_norm_embeddings(spark):
+def test_mmr_ranks_zero_norm_embedding_last(spark):
     """A zero vector in the head (e.g. the hash embedding of empty text)
-    makes cosine NULL on the engine path (Spark returns NULL for x/0 in
-    non-ANSI mode); serving mode must mirror that — NULL-scored rows sort
-    last, same picks, same NULL mmr_score — not raise ZeroDivisionError
-    (round-5 review finding)."""
+    has a NULL cosine to everything (the guard makes it NULL under ANSI
+    too, where a bare division would throw): its mmr_score is NULL and it
+    is ranked last (round-5 review finding)."""
     from big_data_project_spark.operators import vector
 
     cand = spark.createDataFrame(
@@ -146,28 +110,19 @@ def test_mmr_serving_matches_engine_on_zero_norm_embeddings(spark):
         "vec_id long, embedding array<float>, score double",
     )
     eng = vector.mmr_rerank(cand, k=3, lam=0.6).orderBy("rank").collect()
-    srv = (
-        vector.mmr_rerank(cand, k=3, lam=0.6, mode="serving")
-        .orderBy("rank")
-        .collect()
-    )
-    assert [(r.vec_id, r.rank, r.mmr_score) for r in eng] == [
-        (r.vec_id, r.rank, r.mmr_score) for r in srv
-    ]
-    assert eng[-1].vec_id == 2 and eng[-1].mmr_score is None
+    assert [(r.vec_id, r.rank) for r in eng] == [(1, 1), (3, 2), (2, 3)]
+    assert eng[-1].mmr_score is None
 
 
 def test_mmr_rejects_nonpositive_k(spark):
-    """k<1 used to silently return 1 row (engine) vs 0 rows (serving) —
-    both modes must refuse instead."""
+    """k<1 used to silently return 1 row — it must refuse instead."""
     from big_data_project_spark.operators import vector
 
     cand = spark.createDataFrame(
         [(1, [1.0, 0.0], 0.9)], "vec_id long, embedding array<float>, score double"
     )
-    for mode in ("engine", "serving"):
-        with pytest.raises(ValueError, match="k must be"):
-            vector.mmr_rerank(cand, k=0, mode=mode)
+    with pytest.raises(ValueError, match="k must be"):
+        vector.mmr_rerank(cand, k=0)
 
 
 # ---------------------------------------------------------------------------

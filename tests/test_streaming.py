@@ -1578,48 +1578,6 @@ def test_versioned_upsert_sink_two_jobs_per_trigger(spark, tmp_path):
     assert after - before == 2, f"{after - before} jobs in one trigger"
 
 
-def test_transform_with_state_equals_applyinpandaswithstate(spark, tmp_path):
-    """The modern StatefulProcessor operator must carry per-user state
-    across micro-batches exactly like its applyInPandasWithState twin.
-
-    Environment gate: transformWithState's Python⇄JVM state protocol is
-    protobuf-serialized and this container has no google.protobuf (and no
-    package installation) — same class of permanent skip as the
-    sentence-transformers / flan-t5 model branches."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs protobuf for its state protocol",
-    )
-    d = str(tmp_path / "tws_src")
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows,
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    b1 = mk([(1, "2024-01-01 10:00:00", 1, "click", 10.0, "{}"),
-             (2, "2024-01-01 10:01:00", 2, "click", 5.0, "{}")])
-    b2 = mk([(3, "2024-01-01 10:02:00", 1, "click", 7.0, "{}")])
-
-    b1.write.mode("overwrite").parquet(d)
-    stream = st.read_event_stream(spark, d)
-    q = (
-        st.running_user_totals_tws(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_tws")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    q.processAllAvailable()
-    b2.write.mode("append").parquet(d)
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(
-        "SELECT user_id, max(n_events) n, max(total_value) t FROM t_tws GROUP BY user_id"
-    ).collect()
-    got = {r.user_id: (r.n, r.t) for r in rows}
-    assert got == {1: (2, 17.0), 2: (1, 5.0)}, got
-
-
 def test_stream_stream_outer_interval_join_emits_null_matches(
     spark, event_dir, tmp_path
 ):
@@ -2045,6 +2003,46 @@ def test_curate_stream_equals_sequential_batch_fold(spark, tmp_path):
         for r in spark.read.parquet(f"{tmp_path}/out/index/batch-*").collect()
     }
     assert indexed == {0, 4}
+
+
+def test_batch_family_listing_rule(spark, tmp_path):
+    """The one listing rule of every ``batch-*`` family, on a hand-built
+    root: the newest base, then the batch dirs at or above it. The
+    streams' index load also keeps only ids below the current batch (a
+    replayed batch never dedups against its own earlier attempt) and puts
+    the pre-existing index first. Temp dirs and names outside the scheme
+    are ignored."""
+    from big_data_project_spark.streaming.ops import (
+        _batch_family_sources,
+        _family_ids,
+    )
+
+    root = str(tmp_path / "index")
+    for d in (
+        "base-00000002", "base-00000005",
+        "batch-00000001", "batch-00000004",  # folded into base-5
+        "batch-00000005", "batch-00000006",
+        "batch-00000007",  # the current batch's own earlier attempt
+        "batch-00000009",
+        ".batch-00000008.0123abcd.tmp", "batch-7", "_SUCCESS",
+    ):
+        os.makedirs(os.path.join(root, d))
+    assert _family_ids(os.listdir(root)) == ([2, 5], [1, 4, 5, 6, 7, 9])
+
+    def at(*names):
+        return [os.path.join(root, n) for n in names]
+
+    assert _batch_family_sources(spark, root) == at(
+        "base-00000005", "batch-00000005", "batch-00000006",
+        "batch-00000007", "batch-00000009",
+    )
+    base_index = str(tmp_path / "snapshot_index")
+    assert _batch_family_sources(spark, root, 7, base_index) == [
+        base_index, *at("base-00000005", "batch-00000005", "batch-00000006")
+    ]
+    # batch 0 (a fresh checkpoint's first batch) reads the newest base only
+    assert _batch_family_sources(spark, root, 0) == at("base-00000005")
+    assert _batch_family_sources(spark, str(tmp_path / "none"), 3) == []
 
 
 def test_compact_near_dedup_index_preserves_results(spark, tmp_path):

@@ -35,6 +35,33 @@ def test_get_spark_local_session_runs_the_daemon(spark):
     assert state.collect() == [(True, "_invalidate_if_changed")]
 
 
+def test_get_spark_local_session_runs_the_drivers_interpreter(spark):
+    """Python workers on a ``get_spark`` local session start as the
+    driver's own interpreter, not as the ``python`` a ``PATH`` lookup
+    finds: a version-manager shim there (pyenv's is a bash script) forks
+    a dozen commands per worker start, and pyenv's also puts its bin dir
+    in front of the worker's ``PATH``. A caller's value still wins."""
+    from big_data_project_spark.session import _with_launched_here_conf
+
+    sc = spark.sparkContext
+    assert sc.pythonExec == sys.executable
+    assert sc.getConf().get("spark.pyspark.python") == sys.executable
+
+    def interpreter(_):
+        import os
+        import sys
+
+        yield (sys.executable, os.environ.get("PATH"))
+
+    got = sc.parallelize([0], 1).mapPartitions(interpreter).collect()
+    assert got == [(sys.executable, os.environ.get("PATH"))]
+
+    mine = {"spark.pyspark.python": "/usr/local/bin/python3"}
+    assert _with_launched_here_conf(mine)["spark.pyspark.python"] == (
+        "/usr/local/bin/python3"
+    )
+
+
 def test_late_addpyfile_imports_on_reused_workers(spark, tmp_path):
     """pyspark invalidates import caches per task so that a file added after
     a worker started is importable there; the daemon must keep that for a
