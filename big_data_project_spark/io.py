@@ -173,9 +173,33 @@ def write_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).text(path)
 
 
-def from_rows(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
-    """S4: in-memory source (py:83, py:151-154)."""
-    return spark.createDataFrame(rows, schema)
+def from_rows(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """S4: in-memory source (py:83, py:151-154), and the package's one way
+    to turn rows the driver holds into a DataFrame. ``schema`` is a
+    ``StructType`` or a DDL string.
+
+    The rows go in as a ``pyarrow.Table`` with the schema's Arrow types, so
+    Spark plans a ``LocalRelation`` (``LocalTableScan``): building and
+    collecting the frame runs no Spark job and no Python task, and
+    ``spread_input`` sees a local plan. ``createDataFrame(list)`` would
+    instead pickle the rows into a Python RDD (``Scan ExistingRDD``).
+
+    Values mean what they mean to ``createDataFrame(list)``: each row goes
+    through the schema's own ``toInternal`` first, so a naive ``datetime``
+    is local wall-clock time (a bare Arrow build would read it as UTC), and
+    a NULL double stays NULL apart from a NaN one (a pandas build would
+    merge them)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*map(schema.toInternal, rows))) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_project_spark.io import from_rows
 from big_data_project_spark.operators.text import q_ident
 from big_data_project_spark.plans.lineage import lineage_cut
 
@@ -116,6 +117,15 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 _SCORE_SQL = {"ip": _dot_sql, "cosine": _cosine_sql, "l2": _l2_sq_sql}
 
 
+def _score_sql(metric: str):
+    """The score builder for ``metric``; an unknown metric is an error,
+    never a silent l2."""
+    score = _SCORE_SQL.get(metric)
+    if score is None:
+        raise ValueError(f"unknown metric {metric!r}")
+    return score
+
+
 # ---------------------------------------------------------------------------
 # query-vector handling (E2)
 # ---------------------------------------------------------------------------
@@ -148,9 +158,7 @@ def knn_topk(
     The query side carries the broadcast hint, as in knn_topk_batch: a
     query built with createDataFrame has no size statistics, so without
     it the planner broadcasts the embeddings table instead."""
-    score = _SCORE_SQL.get(metric)
-    if score is None:
-        raise ValueError(f"unknown metric {metric!r}")
+    score = _score_sql(metric)
     # SQL text and column names, not Column-API calls: each Column method
     # costs ~10 py4j round trips at plan-build time, paid per query
     scored = embeddings.crossJoin(F.broadcast(query)).selectExpr(
@@ -535,8 +543,7 @@ def knn_topk_batch(
     over the table, and per-query top-k is a window (one shuffle on qid,
     each query's heap built in parallel). This is the serving-path shape:
     N queries cost one scan, not N scans."""
-    # any metric other than ip/cosine scores as l2 (distance, ascending)
-    score = _SCORE_SQL.get(metric, _l2_sq_sql)
+    score = _score_sql(metric)
     direction = "ASC" if score is _l2_sq_sql else "DESC"
     return (
         embeddings.crossJoin(F.broadcast(queries))
@@ -1425,9 +1432,9 @@ def mmr_rerank(
     loop runs as k argmax stages over cached head/sim frames; the
     function is EAGER — it materializes the ≤k-row result, releases every
     cache it pinned (no per-call cache-manager leak), and returns the
-    rows as a fresh DataFrame. Every arithmetic step (cosine fold,
-    λ-combination, tie-break by id) is engine-exact, so MMR's SELECTIONS
-    AND SCORES are value-hashable."""
+    rows as a local relation (io.from_rows). Every arithmetic step
+    (cosine fold, λ-combination, tie-break by id) is engine-exact, so
+    MMR's SELECTIONS AND SCORES are value-hashable."""
     if k < 1:
         raise ValueError("k must be >= 1")
     # persist the head and its pair sims: both are ≤N(+N²) ROWS by
@@ -1490,7 +1497,7 @@ def mmr_rerank(
     rows = selected.collect()
     for c in caches:
         c.unpersist()
-    return cand.sparkSession.createDataFrame(rows, schema)
+    return from_rows(cand.sparkSession, rows, schema)
 
 
 def md5_coarse_centroids(

@@ -435,16 +435,7 @@ _BANDS = [
     """,
 )
 def j5_price_band_join(spark, sf_dir):
-    bands = spark.createDataFrame(
-        _BANDS,
-        T.StructType(
-            [
-                T.StructField("band", T.StringType()),
-                T.StructField("lo", T.DoubleType()),
-                T.StructField("hi", T.DoubleType()),
-            ]
-        ),
-    )
+    bands = io.from_rows(spark, _BANDS, "band string, lo double, hi double")
     return relational.price_band_join(_t(spark, sf_dir, "part"), bands)
 
 
@@ -5560,7 +5551,8 @@ def dd_lsh_autotune(spark, sf_dir):
         hash_fn="md5_affine",
         max_num_hashes=256,
     )
-    return spark.createDataFrame(
+    return io.from_rows(
+        spark,
         [(
             sug["rows_per_band"], sug["bands"], sug["num_hashes"],
             sug["sample_m"], sug["collisions_total"],
@@ -6217,10 +6209,7 @@ def pl_rag_index_e2e(spark, sf_dir):
     embedder = Embedder(model_name=None, dim=8)
     emb = embedder.transform(chunks, text_col="chunk_text")
     q = embedder.transform(
-        # coalesce(1): createDataFrame parallelizes even one row across
-        # defaultParallelism slices — 32 near-empty tasks of scheduling
-        # overhead (~0.2 s, r11 profile) for a single query vector
-        spark.createDataFrame([(_RAG_QTEXT,)], ["chunk_text"]).coalesce(1),
+        io.from_rows(spark, [(_RAG_QTEXT,)], "chunk_text string"),
         text_col="chunk_text",
     ).select(F.col("embedding").alias("q"))
     scored = emb.crossJoin(F.broadcast(q)).select(
@@ -10034,9 +10023,7 @@ def pl_hybrid_retrieval(spark, sf_dir):
     embedder = Embedder(model_name=None, dim=8)
     emb = embedder.transform(docs)
     q = embedder.transform(
-        # coalesce(1): one row must not schedule defaultParallelism tasks
-        # (r11 profile: 0.23 s of pure scheduling for the query vector)
-        spark.createDataFrame([(_HY_QTEXT,)], ["text"]).coalesce(1)
+        io.from_rows(spark, [(_HY_QTEXT,)], "text string")
     ).select(F.col("embedding").alias("q"))
     scored = emb.crossJoin(F.broadcast(q)).select(
         "doc_id", vector.dot("embedding", "q").alias("score")

@@ -113,7 +113,7 @@ def _run(spark, out_dir: str) -> None:
     emb = io.read_parquet(spark, f"{out_dir}/embeddings")
 
     # --- search_similar(query, k=3) (py:377-444) ---
-    qdf = spark.createDataFrame([(QUESTION,)], "text string")
+    qdf = io.from_rows(spark, [(QUESTION,)], "text string")
     q = embedder.transform(qdf).select(F.col("embedding").alias("q"))
     hits = vector.knn_topk(emb, q, k=3, metric="ip")
     top = vector.knn_join_documents(hits, docs, truncate=100)

@@ -467,10 +467,10 @@ def test_rank_bounded_matches_window_rank(spark):
 
 def test_removed_knobs_stay_removed(spark):
     """One value per policy: the only session confs the package reads are
-    the lineage-cut deployment pair and the connected-components local
-    threshold, ``lineage_cut`` knows exactly two modes, and the deleted
-    keyword switches are rejected at the call instead of silently
-    accepted; the deleted second implementations are gone."""
+    the lineage-cut deployment pair, ``lineage_cut`` knows exactly two
+    modes, driver-held rows become a frame only through ``io.from_rows``,
+    and the deleted keyword switches are rejected at the call instead of
+    silently accepted; the deleted second implementations are gone."""
     import pathlib
     import re
 
@@ -485,7 +485,12 @@ def test_removed_knobs_stay_removed(spark):
         for p in pkg.rglob("*.py")
         for m in re.findall(r"spark\.bdps\.([A-Za-z]+)", p.read_text())
     }
-    assert keys == {"lineageCut", "checkpointDir", "ccLocalThreshold"}
+    assert keys == {"lineageCut", "checkpointDir"}
+    assert {
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if "createDataFrame(" in p.read_text()
+    } == {"io.py"}
 
     # the worker interpreter, the worker daemon and the fork-free local
     # filesystem have no switch: session.py alone sets their confs, and

@@ -305,12 +305,14 @@ def test_connected_components_collapses_chains(spark):
     assert got == expect
 
 
-def test_connected_components_local_fast_path_equals_distributed(spark):
+def test_connected_components_local_fast_path_equals_distributed(
+    spark, monkeypatch
+):
     """r11 optimization pin: the driver union-find fast path (fires when
-    the edge list fits under spark.bdps.ccLocalThreshold) must produce the
+    the edge list fits under dedup.CC_LOCAL_THRESHOLD) must produce the
     IDENTICAL (node, min-id cluster) labeling as the distributed pointer-
     jumping fixpoint. Run the same seeded random graph through both paths
-    by toggling the conf, including the threshold boundary (edges == thr
+    by patching the threshold, including the boundary (edges == thr
     takes the fast path; edges == thr with thr-1 falls through)."""
     import random
 
@@ -327,32 +329,25 @@ def test_connected_components_local_fast_path_equals_distributed(spark):
         }
     )
     pdf = spark.createDataFrame(edges, "id_a long, id_b long")
-    key = dd.CC_LOCAL_THRESHOLD_KEY
-    prev = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "0")  # disabled → distributed fixpoint
-        dist = {
-            r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
-        }
-        spark.conf.set(key, str(len(edges)))  # == edge count → fast path
-        fast = {
-            r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
-        }
-        spark.conf.set(key, str(len(edges) - 1))  # one under → falls through
-        over = {
-            r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    monkeypatch.setattr(dd, "CC_LOCAL_THRESHOLD", 0)  # → distributed
+    dist = {
+        r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
+    }
+    monkeypatch.setattr(dd, "CC_LOCAL_THRESHOLD", len(edges))  # fast path
+    fast = {
+        r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
+    }
+    # one under the edge count → falls through
+    monkeypatch.setattr(dd, "CC_LOCAL_THRESHOLD", len(edges) - 1)
+    over = {
+        r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
+    }
     assert fast == dist == over
     # sanity: the graph actually has multi-node components
     assert any(v != k for k, v in dist.items())
 
 
-def test_connected_components_long_chain_bounded(spark):
+def test_connected_components_long_chain_bounded(spark, monkeypatch):
     """r12 regression pin for the r11 stats firewall + the folded
     convergence observation: a PATH graph forces the distributed
     pointer-jumping fixpoint through ~log2(diameter) rounds (here ≥ 8 —
@@ -370,20 +365,13 @@ def test_connected_components_long_chain_bounded(spark):
     pdf = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    key = dd.CC_LOCAL_THRESHOLD_KEY
-    prev = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "0")  # force the distributed fixpoint
-        t0 = _time.perf_counter()
-        got = {
-            r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
-        }
-        elapsed = _time.perf_counter() - t0
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    # force the distributed fixpoint
+    monkeypatch.setattr(dd, "CC_LOCAL_THRESHOLD", 0)
+    t0 = _time.perf_counter()
+    got = {
+        r.node: r.cluster_id for r in dd.connected_components(pdf).collect()
+    }
+    elapsed = _time.perf_counter() - t0
     assert got == {i: 0 for i in range(n)}
     # pre-firewall this regime hung for MINUTES PER ROUND in Catalyst
     # stats estimation; post-firewall the whole fixpoint is seconds. The

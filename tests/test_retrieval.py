@@ -125,6 +125,20 @@ def test_mmr_rejects_nonpositive_k(spark):
         vector.mmr_rerank(cand, k=0)
 
 
+def test_unknown_metric_is_rejected_by_batch_knn(spark):
+    """knn_topk_batch used to score any unknown metric as l2."""
+    from big_data_project_spark.operators import vector
+
+    emb = spark.createDataFrame(
+        [(1, "a", [1.0, 0.0])], "vec_id long, label string, embedding array<double>"
+    )
+    queries = spark.createDataFrame([(0, [1.0, 0.0])], "qid int, q array<double>")
+    for metric in ("l1", "IP", "dot"):
+        with pytest.raises(ValueError, match="unknown metric"):
+            vector.knn_topk_batch(emb, queries, metric=metric)
+    assert vector.knn_topk_batch(emb, queries, metric="l2").count() == 1
+
+
 # ---------------------------------------------------------------------------
 # SRT caption parsing + video/caption alignment
 # ---------------------------------------------------------------------------
