@@ -1520,38 +1520,37 @@ def connected_components(
     # at 100 TB nothing ever collects unboundedly. The probe costs the
     # big case one extra partial pass of the pair source; the small case
     # — the overwhelmingly common one — replaces the whole iteration.
-    if CC_LOCAL_THRESHOLD > 0:
-        head = e.limit(CC_LOCAL_THRESHOLD + 1).collect()
-        if len(head) <= CC_LOCAL_THRESHOLD:
-            parent: dict = {}
+    head = e.limit(CC_LOCAL_THRESHOLD + 1).collect()
+    if len(head) <= CC_LOCAL_THRESHOLD:
+        parent: dict = {}
 
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x):
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
 
-            for row in head:
-                u, v = row[0], row[1]
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[ru] = rv
-            comp_min: dict = {}
-            for n in parent:
-                r = find(n)
-                m = comp_min.get(r)
-                if m is None or n < m:
-                    comp_min[r] = n
-            utype = e.schema[0].dataType.simpleString()
-            return from_rows(
-                pairs.sparkSession,
-                [(n, comp_min[find(n)]) for n in parent],
-                f"node {utype}, cluster_id {utype}",
-            )
+        for row in head:
+            u, v = row[0], row[1]
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[ru] = rv
+        comp_min: dict = {}
+        for n in parent:
+            r = find(n)
+            m = comp_min.get(r)
+            if m is None or n < m:
+                comp_min[r] = n
+        utype = e.schema[0].dataType.simpleString()
+        return from_rows(
+            pairs.sparkSession,
+            [(n, comp_min[find(n)]) for n in parent],
+            f"node {utype}, cluster_id {utype}",
+        )
     edges = (
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
